@@ -454,6 +454,14 @@ object Similarity {
        |THEN $fn($v, x -> CAST(floor((x / $amax) * 127) AS $cast))
        |ELSE $fn($v, x -> CAST(0 AS $cast)) END""".stripMargin
 
+  /** `df` with s5's absmax int8 codes `q8` of its float basis `v` —
+    * the code column the graph family's compressed hops read.
+    */
+  private[ops] def withQ8(df: DataFrame): DataFrame =
+    df.withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
+      .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
+      .drop("amax")
+
   /** Symmetric int8 quantization — the storage/serving compression
     * every large embedding store runs (4× smaller than float32, 8×
     * smaller than the double working type). Per-vector absmax scale:
@@ -2407,7 +2415,8 @@ object Similarity {
     // join of N·degree rows against the corpus). Carrying nbr_q
     // through the window shuffled ~1 KB per candidate PAIR — at
     // production shape that exchange dominated every graph build
-    // (measured via S35Decomp: 22 s of s35's 48 s at 10×).
+    // (22 s of s35's 48 s at 10× — the s35 decomposition, PLANS.md
+    // round 19).
     assignCellsFrom(base, cents)
       .join(probes, col("cid") === col("pcid") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nbr_id"),
@@ -3142,7 +3151,7 @@ object Similarity {
       .localCheckpoint(true)
     val qs = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q").as("qv"))
-    val cand = graphWalk(corpus, edges, qs, cents)
+    val cand = graphWalk(corpus, edges, qs, cents)(GraphHops)
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
     cand
@@ -3150,91 +3159,93 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  /** The walk core shared by the s28 read path and the s29 insert
-    * path: beam-walk the standing pinned edge table from IVF-cell
-    * entry points for an arbitrary query frame (qid, qv); returns the
-    * final visited set (qid, vec_id, cos). The edge frame is passed
-    * in (not rebuilt) so an insert can keep the cos-bearing adjacency
-    * it repairs against pinned once and hand the walk a projection of
-    * the same checkpoint.
+  /** A walk's scoring: the score column it ranks and folds by, the
+    * function computing it from two vector columns, and the vector
+    * columns it reads on the corpus (entry scoring), query and edge
+    * (neighbor) sides. Two instances serve every registered walk:
+    * exact cosine on the build basis ([[CosineWalk]]) and s5's int8
+    * codes ([[Int8Walk]]).
+    */
+  private[ops] final case class WalkScore(name: String, corpusVec: String,
+      qVec: String, nbrVec: String, fn: (String, String) => Column) {
+    def entry: Column = fn(corpusVec, qVec).as(name)
+    def nbr: Column = fn(nbrVec, qVec).as(name)
+  }
+
+  private[ops] val CosineWalk = WalkScore("cos", "q", "qv", "nbr_q",
+    (a, b) => VectorFunctions.cosine_similarity(col(a), col(b)))
+
+  /** Integer dot products of int8 codes — exact in BIGINT (≤ 64·127²
+    * per term) in both engines.
+    */
+  private[ops] val Int8Walk = WalkScore("dot8", "q8", "qq8", "nbr_q8",
+    (a, b) => expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), " +
+      "CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+
+  /** Each cell's entry point: its min-id member. */
+  private[ops] def cellMinEntries(corpus: DataFrame,
+      cents: Array[(Long, Seq[Double], Long)]): DataFrame =
+    assignCellsFrom(corpus, cents)
+      .groupBy("cid").agg(min(col("vec_id")).as("vec_id"))
+
+  /** Walk entry points (qid, vec_id): each query's top-`nprobe` cells
+    * (s11's probe selection) joined to a (cid, vec_id) cell-entry
+    * table. A cid may map to several entries — s35's rebalance gives
+    * every subcell of a split cell its own — so the probe join fans
+    * out and the DISTINCT folds.
+    */
+  private[ops] def probeEntries(qs: DataFrame,
+      cents: Array[(Long, Seq[Double], Long)], cellEntry: DataFrame,
+      nprobe: Int = 2): DataFrame =
+    ivfProbesOf(qs, cents, nprobe)
+      .join(broadcast(cellEntry), col("pcid") === col("cid"))
+      .select(col("qid"), col("vec_id")).distinct()
+
+  /** The beam walk every graph-family member runs: walk the standing
+    * pinned edge table for a query frame (qid, qv, plus the scoring's
+    * query vector) and return the visited set (qid, vec_id, score)
+    * after each hop count in `hops`, walking once to the deepest. The
+    * walk is a pure fold, so its state after h hops IS the h-hop
+    * walk's result — one walk serves a whole hops axis. The edge
+    * frame is passed in (not rebuilt) so an insert can keep the
+    * cos-bearing adjacency it repairs against pinned once and hand
+    * the walk a projection of the same checkpoint.
+    *
+    * Entries default to each query's top-2 trained cells, each
+    * represented by its min-id member (control-plane: ≤ queries ×
+    * nprobe rows); a caller may pass its own (qid, vec_id) entry frame
+    * (s35's per-subcell entries, s36's matching-member entries, the
+    * sweeps' nprobe axis). `score` and the neighbor-visibility
+    * predicate `nbrPred` keep every registered walk — cosine (s28),
+    * label-strict (s36), int8 (s37) — on this ONE audited hop
+    * implementation ([[s28Hop]]).
     */
   private[graft] def graphWalk(corpus: DataFrame, edges: DataFrame,
       qs0: DataFrame, cents: Array[(Long, Seq[Double], Long)],
-      hops: Int = GraphHops,
-      cellEntry0: Option[DataFrame] = None,
-      entries0: Option[DataFrame] = None,
-      scoreCol: String = "cos",
-      score: (String, String) => Column =
-        (a, b) => VectorFunctions.cosine_similarity(col(a), col(b)),
-      corpusVec: String = "q", qVec: String = "qv",
-      nbrVec: String = "nbr_q", nbrPred: Option[Column] = None,
-      beam: Int = GraphBeam): DataFrame =
-    graphWalkSnaps(corpus, edges, qs0, cents, hops, cellEntry0, entries0,
-      scoreCol, score, corpusVec, qVec, nbrVec, nbrPred, beam)(hops)
-
-  /** [[graphWalk]] with intermediate visited-set snapshots: returns
-    * the walk state after every hop count in `snapAt` (plus `hops`
-    * itself). The walk is a pure fold, so the state after h hops IS
-    * the h-hop walk's result — one walk serves a whole hops axis.
-    */
-  private[graft] def graphWalkSnaps(corpus: DataFrame, edges: DataFrame,
-      qs0: DataFrame, cents: Array[(Long, Seq[Double], Long)],
-      hops: Int = GraphHops,
-      cellEntry0: Option[DataFrame] = None,
-      entries0: Option[DataFrame] = None,
-      scoreCol: String = "cos",
-      score: (String, String) => Column =
-        (a, b) => VectorFunctions.cosine_similarity(col(a), col(b)),
-      corpusVec: String = "q", qVec: String = "qv",
-      nbrVec: String = "nbr_q", nbrPred: Option[Column] = None,
-      beam: Int = GraphBeam,
-      snapAt: Seq[Int] = Nil): Map[Int, DataFrame] = {
+      hops: Seq[Int] = Seq(GraphHops),
+      entries: Option[DataFrame] = None,
+      score: WalkScore = CosineWalk,
+      nbrPred: Option[Column] = None,
+      beam: Int = GraphBeam): Map[Int, DataFrame] = {
     val qs = qs0.localCheckpoint(true) // query-batch-sized, read once per hop
-    // entry points: the query's top-2 trained cells, each represented
-    // by its min-id member (control-plane: ≤ queries × nprobe rows).
-    // A caller may pass its own (cid, vec_id) entry table — s35's
-    // rebalance supplies one entry PER SUBCELL of a split cell, so a
-    // cid may map to several entries (the probe join fans out, the
-    // DISTINCT folds) — or, via entries0, a finished (qid, vec_id)
-    // entry frame (s36's strict policy enters at matching members).
-    // The scoring seams (scoreCol/score/corpusVec/qVec/nbrVec) and the
-    // neighbor-visibility predicate keep every registered walk —
-    // cosine (s28), label-strict (s36), int8 (s37) — on this ONE
-    // audited hop implementation.
-    val entries = entries0.getOrElse {
-      val cellEntry = cellEntry0.getOrElse(assignCellsFrom(corpus, cents)
-        .groupBy("cid").agg(min(col("vec_id")).as("vec_id")))
-      ivfProbesOf(qs, cents, nprobe = 2)
-        .join(broadcast(cellEntry), col("pcid") === col("cid"))
-        .select(col("qid"), col("vec_id")).distinct()
-    }
     val cand0 = corpus
-      .join(broadcast(entries), Seq("vec_id"))
+      .join(broadcast(entries.getOrElse(
+        probeEntries(qs, cents, cellMinEntries(corpus, cents)))), Seq("vec_id"))
       .join(broadcast(qs), Seq("qid"))
-      .select(col("qid"), col("vec_id"), score(corpusVec, qVec).as(scoreCol))
+      .select(col("qid"), col("vec_id"), score.entry)
     // LAZY pins (the q54 trick): hop k plans against a materialized
     // recent hop instead of the doubled lineage (cand feeds both the
     // frontier and the union), and the cut rides the next hop's job.
-    // Pinning every SECOND hop (and the last) halves the pin count —
-    // one unpinned level doubles the plan once (bounded), while each
-    // pin is a separate AQE job whose ~40-60 ms driver latency the
-    // sequential gates pay per hop. `snapAt` additionally pins and
-    // RECORDS the visited set after the named hop counts — the walk is
-    // a pure fold, so its state after h hops IS the h-hop walk's
-    // result, which lets a hops-axis sweep serve every point of one
-    // (beam, nprobe) family from a single walk instead of re-walking
-    // the shared prefix per point (the returned map is keyed by hop
-    // count; `hops` itself is always included).
+    // Pinning every SECOND hop (and every returned one) halves the pin
+    // count — one unpinned level doubles the plan once (bounded), while
+    // each pin is a separate AQE job whose ~40-60 ms driver latency the
+    // sequential gates pay per hop.
     var cand = cand0.localCheckpoint(false)
-    val snaps = scala.collection.mutable.Map[Int, DataFrame]()
-    (1 to hops).foreach { h =>
-      cand = s28Hop(edges, qs, cand, scoreCol, score, nbrVec, qVec, nbrPred, beam)
-      if (h % 2 == 0 || h == hops || snapAt.contains(h))
-        cand = cand.localCheckpoint(false)
-      if (snapAt.contains(h)) snaps(h) = cand
-    }
-    snaps(hops) = cand
-    snaps.toMap
+    (1 to hops.max).flatMap { h =>
+      cand = s28Hop(edges, qs, cand, score, nbrPred, beam)
+      if (h % 2 == 0 || hops.contains(h)) cand = cand.localCheckpoint(false)
+      if (hops.contains(h)) Some(h -> cand) else None
+    }.toMap
   }
 
   /** One beam hop, exposed pre-checkpoint for the plan audit: take
@@ -3245,18 +3256,14 @@ object Similarity {
     * recomputed values — the score is deterministic — it is the
     * dedup, not an aggregation. `nbrPred` drops neighbors before they
     * enter the visited set (s36's strict visibility — a broadcast-
-    * side predicate, never a new exchange); `score`/`nbrVec`/`qVec`
-    * swap the hop arithmetic (s37 scores int8 codes).
+    * side predicate, never a new exchange); `score` swaps the hop
+    * arithmetic (s37 scores int8 codes).
     */
   private[ops] def s28Hop(edges: DataFrame, qs: DataFrame,
-      cand: DataFrame,
-      scoreCol: String = "cos",
-      score: (String, String) => Column =
-        (a, b) => VectorFunctions.cosine_similarity(col(a), col(b)),
-      nbrVec: String = "nbr_q", qVec: String = "qv",
+      cand: DataFrame, score: WalkScore = CosineWalk,
       nbrPred: Option[Column] = None, beam: Int = GraphBeam): DataFrame = {
     val wBeam = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col(scoreCol).desc, col("vec_id"))
+      .partitionBy(col("qid")).orderBy(col(score.name).desc, col("vec_id"))
     val frontier = cand
       .withColumn("br", row_number().over(wBeam)).filter(col("br") <= beam)
       .select(col("qid"), col("vec_id").as("src"))
@@ -3264,8 +3271,7 @@ object Similarity {
       .join(broadcast(frontier), Seq("src"))
       .join(broadcast(qs), Seq("qid"))
     val nbrs = nbrPred.fold(expanded)(p => expanded.filter(p))
-      .select(col("qid"), col("nbr_id").as("vec_id"),
-        score(nbrVec, qVec).as(scoreCol))
+      .select(col("qid"), col("nbr_id").as("vec_id"), score.nbr)
     // ONE qid-keyed exchange per hop instead of two: the explicit
     // repartition on qid satisfies BOTH the visited-set fold's
     // clustering (hash(qid) ⊆ (qid, vec_id) — subset rule) and the
@@ -3277,7 +3283,7 @@ object Similarity {
     // partition count to the conf/AQE keeps it scale-adaptive.
     cand.unionByName(nbrs)
       .repartition(col("qid"))
-      .groupBy("qid", "vec_id").agg(max(col(scoreCol)).as(scoreCol))
+      .groupBy("qid", "vec_id").agg(max(col(score.name)).as(score.name))
   }
 
   private def s28GraphSearch(s: SparkSession, d: String): DataFrame = {
@@ -3426,7 +3432,7 @@ object Similarity {
       hops: Int = GraphHops): (DataFrame, DataFrame, DataFrame) = {
     val qs = batch.select(col("vec_id").as("qid"), col("q").as("qv"))
     val visited = graphWalk(nodes,
-      edges.select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents, hops)
+      edges.select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents, Seq(hops))(hops)
     graphInsertTail(visited, edges, qs)
   }
 
@@ -3756,7 +3762,7 @@ object Similarity {
     }
     def search(nodes: DataFrame, edges: DataFrame): DataFrame =
       graphWalk(nodes,
-        edges.select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)
+        edges.select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)(GraphHops)
         .localCheckpoint(true) // reused: this wave's result + next wave's insert
     val c0 = search(corpus, gedge0)
     val (g1, n1) = applyWave(corpus, gedge0, c0, GraphWave1Shift)
@@ -3992,7 +3998,7 @@ object Similarity {
     val snaps = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Double, Int)]()
     def searchTop(wave: Int): Unit = {
       val cand = graphWalk(s.read.parquet(nodesPath),
-        liveEdges().select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)
+        liveEdges().select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)(GraphHops)
       val wTop = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
       snaps ++= cand.withColumn("rnk", row_number().over(wTop))
@@ -4224,7 +4230,7 @@ object Similarity {
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
     def searchTop(): Seq[(Long, Long, Double, Int)] =
       graphWalk(liveNodes(),
-        liveEdges().select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)
+        liveEdges().select(col("src"), col("nbr_id"), col("nbr_q")), qs, cents)(GraphHops)
         .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
         .collect()
         .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"),
@@ -4483,16 +4489,13 @@ object Similarity {
     * maintenance, cited at s30; the IVF twin is s24.
     */
   private def s35GraphRebalance(s: SparkSession, d: String): DataFrame =
-    s35WithK(s, d)
+    s35WithKFlag(s, d)._1
 
-  private[graft] def s35WithK(s: SparkSession, d: String, k: Int = 8): DataFrame =
-    s35WithKFlag(s, d, k)._1
-
-  /** [[s35WithK]] plus the q0-burst-rank-1 outcome as a RETURN value
-    * (not shared mutable state): the boolean the stress harness
-    * records in its emitted JSON when the rank-1 check relaxes from
-    * require() to a report at off-shape k (recall vs fixed serving
-    * knobs — see the rebalance doc below).
+  /** The s35 gate at codebook size `k`, plus the q0-burst-rank-1
+    * outcome as a RETURN value (not shared mutable state): the boolean
+    * the stress harness records in its emitted JSON when the rank-1
+    * check relaxes from require() to a report at off-shape k (recall
+    * vs fixed serving knobs — see the rebalance doc below).
     */
   private[graft] def s35WithKFlag(s: SparkSession, d: String,
       k: Int = 8): (DataFrame, Boolean) = {
@@ -4511,13 +4514,14 @@ object Similarity {
       .localCheckpoint(true)
     val qs = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q").as("qv"))
+      .localCheckpoint(true) // both walks and the post-rebalance probes read it
     val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
     def top5(walk: DataFrame): DataFrame = walk
       .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
       .select(col("qid").as("src"), col("vec_id").as("nbr_id"),
         col("cos"), col("rnk"))
     val s0 = top5(graphWalk(assigned.select("vec_id", "q"),
-      gedge.select("src", "nbr_id", "nbr_q"), qs, cents))
+      gedge.select("src", "nbr_id", "nbr_q"), qs, cents)(GraphHops))
     // hot detection: index metadata, ≤k rows (the s24 bound)
     val sizes = assigned.groupBy(col("cid")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -4563,7 +4567,7 @@ object Similarity {
     // rank exchange carries (src, nbr_id, cos) ONLY — vectors rejoin
     // the ≤degree winners from the broadcast pile afterward (carrying
     // nbr_q through the window shuffled ~1 KB/pair and dominated the
-    // whole gate at 10×; measured via S35Decomp)
+    // whole gate at 10× — the s35 decomposition, PLANS.md round 19)
     val wAdj = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("nbr_id"))
     val rewired = sub
       .select(col("cid"), col("path"), col("vec_id").as("src"), col("q").as("sq"))
@@ -4600,7 +4604,8 @@ object Similarity {
         .groupBy("cid").agg(min(col("vec_id")).as("vec_id")))
     val s1 = top5(graphWalk(assigned.select("vec_id", "q"),
       g1.select("src", "nbr_id", "nbr_q"), qs, cents,
-      cellEntry0 = Some(cellEntry1))).localCheckpoint(true)
+      entries = Some(probeEntries(qs, cents, cellEntry1)))(GraphHops))
+      .localCheckpoint(true)
     // the rebalanced index must still serve the pile: vector 0's query
     // resolves to a burst copy at rank 1 (cos ≈ 1 — unfakeable).
     // Enforced at the registered shape (k = 8), where it is
@@ -4620,9 +4625,6 @@ object Similarity {
     if (cents.length <= 8)
       require(burstRank1,
         s"query 0's rank-1 after rebalance is $q0top, not a burst copy")
-    else if (!burstRank1)
-      println(s"[s35] off-shape k=${cents.length}: q0 rank-1 $q0top not a burst copy " +
-        "(recall, not cost — see doc)")
     val out = s0.withColumn("phase", lit(0)).withColumn("kind", lit("search"))
       .unionByName(rewired.select(col("src"), col("nbr_id"), col("cos"), col("rnk"))
         .withColumn("phase", lit(1)).withColumn("kind", lit("rewire")))
@@ -4941,10 +4943,9 @@ object Similarity {
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
     // routed: the unmodified s28 walk, predicate applied at selection
-    val routed = graphWalk(corpus, edges, qs.select(col("qid"), col("qv")), cents)
-      .join(labels, Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
-      .filter(col("label") === col("qlabel"))
+    val routed = routedMatches(
+        graphWalk(corpus, edges, qs.select(col("qid"), col("qv")), cents)(GraphHops),
+        corpus, qs)
       .withColumn("rnk", row_number().over(wTop))
       .filter(col("rnk") <= FilteredK)
       .select(lit("routed").as("mode"), col("qid"), col("qlabel"),
@@ -4960,8 +4961,8 @@ object Similarity {
         col("pcid") === col("cid") && col("qlabel") === col("label"))
       .select(col("qid"), col("vec_id")).distinct()
     val strictCand = graphWalk(corpus, edges, qs, cents,
-      entries0 = Some(entriesF),
-      nbrPred = Some(col("nbr_label") === col("qlabel")))
+      entries = Some(entriesF),
+      nbrPred = Some(col("nbr_label") === col("qlabel")))(GraphHops)
     val strict = strictCand
       .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
       .withColumn("rnk", row_number().over(wTop))
@@ -5086,6 +5087,69 @@ object Similarity {
     */
   private[ops] val QuantFetch = 20
 
+  /** The compressed stored index: the full-precision kNN topology
+    * (offline, s19's stance) with ONLY the neighbors' int8 codes
+    * beside it, pinned. `corpus` carries (vec_id, q, q8).
+    */
+  private[ops] def int8Edges(corpus: DataFrame,
+      cents: Array[(Long, Seq[Double], Long)]): DataFrame =
+    knnEdges(corpus.select(col("vec_id"), col("q")), cents, GraphDegree)
+      .select(col("src"), col("nbr_id"))
+      .join(corpus.select(col("vec_id").as("nbr_id"), col("q8").as("nbr_q8")),
+        Seq("nbr_id"))
+      .select(col("src"), col("nbr_id"), col("nbr_q8"))
+      .localCheckpoint(true)
+
+  /** The routed policy's predicate at candidate selection (s36):
+    * keep the visited candidates whose `label` in `corpus` matches
+    * their query's `qlabel` — non-matching nodes still carried the
+    * walk.
+    */
+  private def routedMatches(cand: DataFrame, corpus: DataFrame,
+      qs: DataFrame): DataFrame =
+    cand
+      .join(corpus.select(col("vec_id"), col("label")), Seq("vec_id"))
+      .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
+      .filter(col("label") === col("qlabel"))
+
+  /** The full-precision fetch + exact rerank (s6's refine shape): each
+    * query's top-[[QuantFetch]] candidates by `dot8` join their float
+    * vectors `v` from `vecs` — ONE id-keyed join bounded by the result
+    * size, never by the walk — and rank by exact cosine against the
+    * query's `qvf`, keeping ranks ≤ `k`.
+    */
+  private def fetchRerank(cand: DataFrame, vecs: DataFrame, qs: DataFrame,
+      k: Int): DataFrame = {
+    val wFetch = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("qid")).orderBy(col("dot8").desc, col("vec_id"))
+    val wExact = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
+    cand
+      .withColumn("crk", row_number().over(wFetch))
+      .filter(col("crk") <= QuantFetch)
+      .join(vecs.select(col("vec_id"), col("v")), Seq("vec_id"))
+      .join(broadcast(qs.select(col("qid"), col("qvf"))), Seq("qid"))
+      .withColumn("cos", VectorFunctions.cosine_similarity(col("qvf"), col("v")))
+      .withColumn("rnk", row_number().over(wExact))
+      .filter(col("rnk") <= k)
+  }
+
+  /** Exact filtered ground truth (the evaluation leg, not the serving
+    * path): brute-force cosine of the float basis `v` against `qvf`
+    * over the label-matching corpus — each query's top-[[FilteredK]]
+    * (qid, vec_id).
+    */
+  private def filteredTruth(corpus: DataFrame, qs: DataFrame): DataFrame =
+    corpus
+      .join(broadcast(qs))
+      .filter(col("label") === col("qlabel"))
+      .select(col("qid"), col("vec_id"),
+        VectorFunctions.cosine_similarity(col("v"), col("qvf")).as("tcos"))
+      .withColumn("trk", row_number().over(org.apache.spark.sql.expressions
+        .Window.partitionBy(col("qid")).orderBy(col("tcos").desc, col("vec_id"))))
+      .filter(col("trk") <= FilteredK)
+      .select(col("qid"), col("vec_id"))
+
   /** DiskANN's actual serving trick (Subramanya et al., NeurIPS
     * 2019): the beam walk never touches full-precision data — hops
     * score COMPRESSED neighbor vectors held beside the adjacency
@@ -5117,45 +5181,17 @@ object Similarity {
   private[graft] def s37From(base: DataFrame,
       cents: Array[(Long, Seq[Double], Long)]): DataFrame = {
     // int8 codes beside the float basis (s5's absmax quantization)
-    val coded = base.withColumn("amax",
-        expr("array_max(transform(v, x -> abs(x)))"))
-      .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
-      .drop("amax")
+    val coded = withQ8(base)
     val corpus = coded.filter(col("vec_id") >= 5)
     val qs = coded.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q").as("qv"),
         col("q8").as("qq8"), col("v").as("qvf"))
       .localCheckpoint(true)
-    // the stored index: graph topology from the full-precision build
-    // (offline, s19's stance), adjacency carrying ONLY the int8 codes
-    val edges8 = knnEdges(corpus, cents, GraphDegree)
-      .select(col("src"), col("nbr_id"))
-      .join(corpus.select(col("vec_id").as("nbr_id"), col("q8").as("nbr_q8")),
-        Seq("nbr_id"))
-      .select(col("src"), col("nbr_id"), col("nbr_q8"))
-      .localCheckpoint(true)
-    def dot8(a: String, b: String): Column = expr(
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-    // the SAME audited walk, int8 hop arithmetic through the scoring
-    // seams (probes still select entry cells on the build basis `qv`)
-    val cand = graphWalk(corpus, edges8,
-      qs.select(col("qid"), col("qv"), col("qq8")), cents,
-      scoreCol = "dot8", score = dot8,
-      corpusVec = "q8", qVec = "qq8", nbrVec = "nbr_q8")
-    // the full-precision fetch + exact rerank (s6's refine shape)
-    val wFetch = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dot8").desc, col("vec_id"))
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    cand
-      .withColumn("crk", row_number().over(wFetch))
-      .filter(col("crk") <= QuantFetch)
-      .join(corpus.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qvf"))), Seq("qid"))
-      .withColumn("cos", VectorFunctions.cosine_similarity(col("qvf"), col("v")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= GraphK)
+    // the SAME audited walk, int8 hop arithmetic (probes still select
+    // entry cells on the build basis `qv`)
+    val cand = graphWalk(corpus, int8Edges(corpus, cents),
+      qs.select(col("qid"), col("qv"), col("qq8")), cents, score = Int8Walk)(GraphHops)
+    fetchRerank(cand, corpus, qs, GraphK)
       .select("qid", "vec_id", "dot8", "cos", "rnk")
       .orderBy("qid", "rnk")
   }
@@ -5259,58 +5295,20 @@ object Similarity {
     */
   private[graft] def s38From(base: DataFrame,
       cents: Array[(Long, Seq[Double], Long)]): DataFrame = {
-    val coded = base.withColumn("amax",
-        expr("array_max(transform(v, x -> abs(x)))"))
-      .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
-      .drop("amax")
+    val coded = withQ8(base)
     val corpus = coded.filter(col("vec_id") >= 5)
-    val labels = corpus.select(col("vec_id"), col("label"))
     val qs = coded.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q").as("qv"),
         col("q8").as("qq8"), col("v").as("qvf"), col("label").as("qlabel"))
       .localCheckpoint(true)
-    // the stored index: label-blind topology, int8 codes beside it
-    val edges8 = knnEdges(corpus, cents, GraphDegree)
-      .select(col("src"), col("nbr_id"))
-      .join(corpus.select(col("vec_id").as("nbr_id"), col("q8").as("nbr_q8")),
-        Seq("nbr_id"))
-      .select(col("src"), col("nbr_id"), col("nbr_q8"))
-      .localCheckpoint(true)
-    def dot8(a: String, b: String): Column = expr(
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-    // routed + compressed: the ONE audited walk, int8 arithmetic, no
-    // visibility predicate — the filter applies at selection
-    val cand = graphWalk(corpus, edges8,
-      qs.select(col("qid"), col("qv"), col("qq8")), cents,
-      scoreCol = "dot8", score = dot8,
-      corpusVec = "q8", qVec = "qq8", nbrVec = "nbr_q8")
-    val wFetch = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dot8").desc, col("vec_id"))
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    // exact filtered ground truth (evaluation leg, s36's shape)
-    val truth = corpus
-      .join(broadcast(qs))
-      .filter(col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"),
-        VectorFunctions.cosine_similarity(col("v"), col("qvf")).as("tcos"))
-      .withColumn("trk", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("qid")).orderBy(col("tcos").desc, col("vec_id"))))
-      .filter(col("trk") <= FilteredK)
-      .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-    cand
-      .join(labels, Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
-      .filter(col("label") === col("qlabel"))
-      .withColumn("crk", row_number().over(wFetch))
-      .filter(col("crk") <= QuantFetch)
-      .join(corpus.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qvf"))), Seq("qid"))
-      .withColumn("cos", VectorFunctions.cosine_similarity(col("qvf"), col("v")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= FilteredK)
-      .join(truth, Seq("qid", "vec_id"), "left")
+    // routed + compressed: the ONE audited walk over the label-blind
+    // int8 index, no visibility predicate — the filter applies at
+    // selection
+    val cand = graphWalk(corpus, int8Edges(corpus, cents),
+      qs.select(col("qid"), col("qv"), col("qq8")), cents, score = Int8Walk)(GraphHops)
+    fetchRerank(routedMatches(cand, corpus, qs), corpus, qs, FilteredK)
+      .join(filteredTruth(corpus, qs).withColumn("hit", lit(1)),
+        Seq("qid", "vec_id"), "left")
       .select(col("qid"), col("qlabel"), col("vec_id"), col("dot8"),
         col("cos"), col("rnk"), coalesce(col("hit"), lit(0)).as("hit"))
       .orderBy("qid", "rnk")
@@ -5414,9 +5412,7 @@ object Similarity {
         val base = serveBaseOf(s, d)
         saveCodebook(trainCodebook(base, iters = 2, k = k), s"$dir/codebook")
         val cents0 = collectCents(loadCodebook(s, s"$dir/codebook"))
-        val corpus = base.filter(col("vec_id") >= 5)
-          .withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
-          .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
+        val corpus = withQ8(base.filter(col("vec_id") >= 5))
           .select(col("vec_id"), col("label"), col("v"), col("q"), col("q8"))
           .localCheckpoint(true)
         corpus.write.mode("overwrite").parquet(s"$dir/nodes")
@@ -5447,38 +5443,11 @@ object Similarity {
       cents: Array[(Long, Seq[Double], Long)]): DataFrame = {
     val nodes = graphLiveNodes(s, idxDir).localCheckpoint(true)
     val edges8 = graphLiveEdges(s, idxDir, Seq("nbr_q8")).localCheckpoint(true)
-    def dot8(a: String, b: String): Column = expr(
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)")
     val cand = graphWalk(nodes, edges8,
-      qs.select(col("qid"), col("qv"), col("qq8")), cents,
-      scoreCol = "dot8", score = dot8,
-      corpusVec = "q8", qVec = "qq8", nbrVec = "nbr_q8")
-    val wFetch = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dot8").desc, col("vec_id"))
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    val truth = nodes
-      .join(broadcast(qs))
-      .filter(col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"),
-        VectorFunctions.cosine_similarity(col("v"), col("qvf")).as("tcos"))
-      .withColumn("trk", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("qid")).orderBy(col("tcos").desc, col("vec_id"))))
-      .filter(col("trk") <= FilteredK)
-      .select(col("qid"), col("vec_id"), lit(1).as("hit"))
-    cand
-      .join(nodes.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
-      .filter(col("label") === col("qlabel"))
-      .withColumn("crk", row_number().over(wFetch))
-      .filter(col("crk") <= QuantFetch)
-      .join(nodes.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qvf"))), Seq("qid"))
-      .withColumn("cos", VectorFunctions.cosine_similarity(col("qvf"), col("v")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= FilteredK)
-      .join(truth, Seq("qid", "vec_id"), "left")
+      qs.select(col("qid"), col("qv"), col("qq8")), cents, score = Int8Walk)(GraphHops)
+    fetchRerank(routedMatches(cand, nodes, qs), nodes, qs, FilteredK)
+      .join(filteredTruth(nodes, qs).withColumn("hit", lit(1)),
+        Seq("qid", "vec_id"), "left")
       .select(col("qid"), col("qlabel"), col("vec_id"), col("dot8"),
         col("cos"), col("rnk"), coalesce(col("hit"), lit(0)).as("hit"))
   }
@@ -5524,9 +5493,7 @@ object Similarity {
     * by the gate, the spec and the k-scaled stress harness.
     */
   private[graft] def s39QueriesOf(s: SparkSession, d: String): DataFrame =
-    serveBaseOf(s, d).filter(col("vec_id") < 5)
-      .withColumn("amax", expr("array_max(transform(v, x -> abs(x)))"))
-      .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
+    withQ8(serveBaseOf(s, d).filter(col("vec_id") < 5))
       .select(col("vec_id").as("qid"), col("q").as("qv"), col("q8").as("qq8"),
         col("v").as("qvf"), col("label").as("qlabel"))
 
@@ -5758,6 +5725,27 @@ object Similarity {
       hits: Long, cands: Long, served: Seq[(Long, Long, Int)],
       refines: Long = 0L)
 
+  /** `f` over `items` as concurrent Spark jobs, results in item order.
+    * Sweep points are independent serves over one pinned build whose
+    * small stages alone cannot saturate the executors, so running
+    * them one after another pays points × per-hop scheduling latency.
+    * The pool is DEDICATED and sized to the items, not the
+    * process-global fork-join pool: each task BLOCKS on Spark actions,
+    * which on the shared pool would silently serialize the sweep on a
+    * low-core host and starve any other global-EC user (and nesting a
+    * global-EC Await inside another would deadlock). It is shut down
+    * after the Await so its threads never outlive the call.
+    */
+  private[ops] def concurrently[T, A](items: Seq[T])(f: T => A): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(items.size)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try items.map(t => Future(f(t))).map(Await.result(_, Duration.Inf))
+    finally pool.shutdown()
+  }
+
   /** The sweep engine shared by s40 (beam × nprobe), s42 (the
     * auto-tuner serving from the same grid) and s43 (hops × beam):
     * ONE standing build (graph + codes, pinned), then each grid
@@ -5770,94 +5758,38 @@ object Similarity {
       cents: Array[(Long, Seq[Double], Long)],
       grid: Seq[(Int, Int, Int)],
       withRefines: Boolean = false): Seq[SweepPoint] = {
-    val coded = base.withColumn("amax",
-        expr("array_max(transform(v, x -> abs(x)))"))
-      .withColumn("q8", expr(absmaxQ8Sql("v", "amax", "transform", "BIGINT")))
-      .drop("amax")
+    val coded = withQ8(base)
     val corpus = coded.filter(col("vec_id") >= 5).localCheckpoint(true)
-    val labels = corpus.select(col("vec_id"), col("label"))
     val qs = coded.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q").as("qv"),
         col("q8").as("qq8"), col("v").as("qvf"), col("label").as("qlabel"))
       .localCheckpoint(true)
-    val edges8 = knnEdges(corpus.select(col("vec_id"), col("q")), cents, GraphDegree)
-      .select(col("src"), col("nbr_id"))
-      .join(corpus.select(col("vec_id").as("nbr_id"), col("q8").as("nbr_q8")),
-        Seq("nbr_id"))
-      .select(col("src"), col("nbr_id"), col("nbr_q8"))
+    val edges8 = int8Edges(corpus, cents)
+    val cellEntry = cellMinEntries(corpus.select(col("vec_id"), col("q")), cents)
       .localCheckpoint(true)
-    val cellEntry = assignCellsFrom(corpus.select(col("vec_id"), col("q")), cents)
-      .groupBy("cid").agg(min(col("vec_id")).as("vec_id"))
-      .localCheckpoint(true)
-    def dot8(a: String, b: String): Column = expr(
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)")
     // ONE shared exact-filtered-truth leg (the evaluation scan)
-    val truthIds = corpus
-      .join(broadcast(qs))
-      .filter(col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"),
-        VectorFunctions.cosine_similarity(col("v"), col("qvf")).as("tcos"))
-      .withColumn("trk", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("qid")).orderBy(col("tcos").desc, col("vec_id"))))
-      .filter(col("trk") <= FilteredK)
-      .select(col("qid"), col("vec_id")).collect()
+    val truthIds = filteredTruth(corpus, qs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val wFetch = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dot8").desc, col("vec_id"))
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    // the grid points are INDEPENDENT serves over the same pinned
-    // build — run them as concurrent Spark jobs (local[32] and a real
-    // cluster both schedule them in parallel; each point's small
-    // stages alone cannot saturate the executors, which made the
-    // sequential sweep pay grid × per-hop scheduling latency). Each
-    // point is internally deterministic; the grid order of the output
-    // is fixed by construction.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // a DEDICATED pool sized to the grid, not the process-global
-    // fork-join pool: each future BLOCKS on Spark actions, which on
-    // the shared pool would silently serialize the sweep on a
-    // low-core host and starve any other global-EC user (and nesting
-    // a global-EC Await inside another would deadlock). Shut down
-    // after the Await so the threads never outlive the sweep.
     // hop-prefix sharing: grid points that differ ONLY in hop count
-    // are the SAME walk read at different depths (the walk is a pure
-    // fold — its state after h hops is the h-hop walk's result), so
-    // each (beam, nprobe) family walks ONCE to its deepest point with
-    // snapshots at every requested depth instead of re-walking the
-    // shared prefix per point. The families stay concurrent futures;
-    // each point's serve/hits/cands/refines legs are unchanged.
+    // are the SAME walk read at different depths, so each (beam,
+    // nprobe) family walks ONCE to its deepest point, returning the
+    // visited set at every requested depth, instead of re-walking the
+    // shared prefix per point. The families run as concurrent Spark
+    // jobs ([[concurrently]]); each point is internally deterministic
+    // and the output keeps grid order.
     val byFam = grid.zipWithIndex
       .groupBy { case ((b, np, _), _) => (b, np) }.toSeq
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(byFam.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futs = for (((b, np), pts) <- byFam) yield Future {
-      val hs = pts.map(_._1._3).distinct
-      val entries = ivfProbesOf(qs.select(col("qid"), col("qv")), cents, np)
-        .join(broadcast(cellEntry), col("pcid") === col("cid"))
-        .select(col("qid"), col("vec_id")).distinct()
-      val snaps = graphWalkSnaps(corpus, edges8,
+    concurrently(byFam) { case ((b, np), pts) =>
+      val snaps = graphWalk(corpus, edges8,
         qs.select(col("qid"), col("qv"), col("qq8")), cents,
-        hops = hs.max, entries0 = Some(entries),
-        scoreCol = "dot8", score = dot8,
-        corpusVec = "q8", qVec = "qq8", nbrVec = "nbr_q8",
-        beam = b, snapAt = hs)
+        hops = pts.map(_._1._3).distinct,
+        entries = Some(probeEntries(qs.select(col("qid"), col("qv")), cents,
+          cellEntry, np)),
+        score = Int8Walk, beam = b)
       pts.map { case ((_, _, h), idx) =>
         val cand = snaps(h)
-        val served = cand
-          .join(labels, Seq("vec_id"))
-          .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
-          .filter(col("label") === col("qlabel"))
-          .withColumn("crk", row_number().over(wFetch))
-          .filter(col("crk") <= QuantFetch)
-          .join(corpus.select(col("vec_id"), col("v")), Seq("vec_id"))
-          .join(broadcast(qs.select(col("qid"), col("qvf"))), Seq("qid"))
-          .withColumn("cos", VectorFunctions.cosine_similarity(col("qvf"), col("v")))
-          .withColumn("rnk", row_number().over(wExact))
-          .filter(col("rnk") <= FilteredK)
+        val matching = routedMatches(cand, corpus, qs)
+        val served = fetchRerank(matching, corpus, qs, FilteredK)
           .select(col("qid"), col("vec_id"), col("rnk")).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         val hits = served.count(t => truthIds((t._1, t._2)))
@@ -5867,19 +5799,13 @@ object Similarity {
         // curves never pay it)
         val refines =
           if (!withRefines) 0L
-          else cand
-            .join(labels, Seq("vec_id"))
-            .join(broadcast(qs.select(col("qid"), col("qlabel"))), Seq("qid"))
-            .filter(col("label") === col("qlabel"))
+          else matching
             .groupBy(col("qid")).agg(count(lit(1)).as("n"))
             .collect()
             .map(r => math.min(QuantFetch.toLong, r.getAs[Long]("n"))).sum
         (idx, SweepPoint(b, np, h, hits.toLong, cand.count(), served.toSeq, refines))
       }
-    }
-    try futs.flatMap(Await.result(_, Duration.Inf))
-      .sortBy(_._1).map(_._2)
-    finally pool.shutdown()
+    }.flatten.sortBy(_._1).map(_._2)
   }
 
   private[graft] def s40From(base: DataFrame,
@@ -6591,16 +6517,8 @@ object Similarity {
       .filter(col("trk") <= FilteredK)
       .select(col("qid"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // independent serves over ONE pristine stored build — concurrent
-    // Spark jobs on a dedicated pool (graphSweepPoints's rationale:
-    // each point's small stages alone cannot saturate the executors,
-    // and the global fork-join pool must never hold blocked actions)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(grid.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futs = for ((np, f) <- grid) yield Future {
+    // independent serves over ONE pristine stored build
+    concurrently(grid) { case (np, f) =>
       val probes = ivfProbes(base, cents, nprobe = np)
         .select(col("qid"), col("pcid")).localCheckpoint(true)
       // the point's cost, read straight off the stored layout: the
@@ -6617,8 +6535,6 @@ object Similarity {
       IvfSweepPoint(np, f, hits, perQ.sum,
         perQ.map(n => math.min(f.toLong, n)).sum, served.toSeq)
     }
-    try futs.map(Await.result(_, Duration.Inf))
-    finally pool.shutdown()
   }
 
   /** s42's auto-tuner for the IVF family's stored serving path — the
@@ -6807,23 +6723,10 @@ object Similarity {
       .localCheckpoint(true)
     val luts = pqLuts(pqSubCols(base.filter(col("vec_id") < 5)), cbP)
       .localCheckpoint(true)
-    // ONE shared exact-filtered-truth leg — the graph sweep's, verbatim
-    val truthIds = corpus
-      .join(broadcast(qs))
-      .filter(col("label") === col("qlabel"))
-      .select(col("qid"), col("vec_id"),
-        VectorFunctions.cosine_similarity(col("v"), col("qvf")).as("tcos"))
-      .withColumn("trk", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy(col("qid")).orderBy(col("tcos").desc, col("vec_id"))))
-      .filter(col("trk") <= FilteredK)
-      .select(col("qid"), col("vec_id")).collect()
+    // ONE shared exact-filtered-truth leg — the graph sweep's
+    val truthIds = filteredTruth(corpus, qs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(grid.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futs = for ((np, f) <- grid) yield Future {
+    concurrently(grid) { case (np, f) =>
       val cand = ivfFilteredCand(corpus, qs, cents, np).localCheckpoint(true)
       val perQ = cand.groupBy(col("qid")).agg(count(lit(1)).as("n"))
         .collect().map(_.getAs[Long]("n"))
@@ -6834,8 +6737,6 @@ object Similarity {
       IvfSweepPoint(np, f, hits, perQ.sum,
         perQ.map(n => math.min(f.toLong, n)).sum, served.toSeq)
     }
-    try futs.map(Await.result(_, Duration.Inf))
-    finally pool.shutdown()
   }
 
   /** The sweep's standing coded corpus: cell assignment + PQ codes as
@@ -7035,22 +6936,18 @@ object Similarity {
     // the two families' sweeps are independent work over the same
     // basis — run them as two concurrent harnesses (each already
     // schedules its grid as concurrent Spark jobs on its own
-    // dedicated pool; this outer pool only overlaps the two)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val gF = Future { graphSweepPoints(base, cents, S42Grid, withRefines = true) }
-    val vF = Future {
-      ivfFilteredSweepPoints(base, cents, pqTrain(pqSubs(s, d)), S44Grid)
-    }
-    val (g, v) =
-      try (Await.result(gF, Duration.Inf), Await.result(vF, Duration.Inf))
-      finally pool.shutdown()
-    val curve = (g.map(p => ("graph", p.beam, p.nprobe, p.hops, QuantFetch,
-        p.hits, p.cands, p.refines)) ++
-      v.map(p => ("ivf", 0, p.nprobe, 0, p.fetch, p.hits, p.cands, p.refines)))
+    // dedicated pool; this outer pool only overlaps the two). Each
+    // row: (family, beam, nprobe, hops, fetch_k) knobs, then hits,
+    // cands, refines and the served rows.
+    val rows = concurrently(Seq(
+      () => graphSweepPoints(base, cents, S42Grid, withRefines = true).map(p =>
+        (("graph", p.beam, p.nprobe, p.hops, QuantFetch), p.hits, p.cands, p.refines,
+          p.served)),
+      () => ivfFilteredSweepPoints(base, cents, pqTrain(pqSubs(s, d)), S44Grid).map(p =>
+        (("ivf", 0, p.nprobe, 0, p.fetch), p.hits, p.cands, p.refines, p.served))
+    ))(_()).flatten
+    val curve = rows.map { case ((fam, b, np, h, f), hits, c, r, _) =>
+        (fam, b, np, h, f, hits, c, r) }
       .toDF("family", "beam", "nprobe", "hops", "fetch_k",
         "hits", "cands", "refines")
     val cost = col("cands") + col("refines")
@@ -7062,10 +6959,8 @@ object Similarity {
         col("hops"), col("fetch_k"))
     val chosen = curve.withColumn("pick", row_number().over(wChoice))
       .filter(col("pick") === 1).drop("pick")
-    val served = (g.flatMap(p => p.served.map(r =>
-        ("graph", p.beam, p.nprobe, p.hops, QuantFetch, r._1, r._2, r._3))) ++
-      v.flatMap(p => p.served.map(r =>
-        ("ivf", 0, p.nprobe, 0, p.fetch, r._1, r._2, r._3))))
+    val served = rows.flatMap { case ((fam, b, np, h, f), _, _, _, srv) =>
+        srv.map(r => (fam, b, np, h, f, r._1, r._2, r._3)) }
       .toDF("family", "beam", "nprobe", "hops", "fetch_k",
         "qid", "vec_id", "rnk")
     served.join(broadcast(chosen),

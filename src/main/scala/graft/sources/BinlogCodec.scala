@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.zip.CRC32
 
+import graft.model.GtidSet
 import graft.streaming.FeedRow
 
 /** Binary binlog-event codec — the last buildable slice of the
@@ -680,17 +681,6 @@ object BinlogWriter {
   }
 }
 
-/** [[BinlogTransport]] over decoded binlog bytes: what `fetch()`
-  * looks like once the socket half exists — read bytes, decode,
-  * assemble transactions. Wrapped in [[ReconnectingTransport]] it
-  * carries the reference's full failure envelope.
-  */
-final class BinlogFileTransport(bytes: () => Array[Byte]) extends BinlogTransport {
-  def this(fixed: Array[Byte]) = this(() => fixed)
-  override def fetch(): Vector[FeedRow] =
-    BinlogDecoder.toFeedRows(BinlogDecoder.decode(bytes()))
-}
-
 /** Registry of binary binlog SEGMENTS (each a self-contained
   * magic+FDE stream — the shape of rotated/archived binlog files).
   * `append` models rotation: the binlog growing by another file while
@@ -720,11 +710,16 @@ object BinlogBuffers {
   * `fetch()` runs twice per micro-batch (latestOffset +
   * planInputPartitions) and a long-lived stream over a growing archive
   * would otherwise pay O(segments²) cumulative CRC+parse work.
+  * [[commit]] trims the decoded tail to the uncommitted window; the
+  * registry keeps every segment, so a fresh transport (a query
+  * restart) still replays from the first one.
   * Single-threaded like the stream that drives it.
   */
 final class BinlogBufferTransport(id: String) extends BinlogTransport {
   private var segCount = 0
   private var rows = Vector.empty[FeedRow]
+  override def commit(uuid: String, committed: GtidSet): Unit =
+    rows = rows.filter(r => !committed.contains(uuid, r.pos))
   override def fetch(): Vector[FeedRow] = {
     val segs = BinlogBuffers.get(id)
     if (segs.length > segCount) {

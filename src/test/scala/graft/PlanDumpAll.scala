@@ -2,7 +2,7 @@ package graft
 
 /** Write `.explain("formatted")` of named registered queries to files:
   * `Test/runMain graft.PlanDumpAll <outDir> <query> [query...]` —
-  * the plans/r20 before/after evidence capture.
+  * the before/after plan capture under `plans/` that PLANS.md cites.
   */
 object PlanDumpAll {
   def main(args: Array[String]): Unit = {

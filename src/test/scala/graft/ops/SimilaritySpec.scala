@@ -1866,6 +1866,37 @@ class SimilaritySpec extends AnyFunSuite {
       "hits is recall@5 over 5 queries against the filtered truth")
   }
 
+  test("graph walk: each hop-prefix snapshot equals the standalone walk of that depth") {
+    import org.apache.spark.sql.functions.col
+    // s40/s42/s43 read every hops point of a (beam, nprobe) family off
+    // ONE walk's snapshots — the int8 walk at beam 16, set up as
+    // graphSweepPoints runs it
+    val base = Similarity.serveBaseOf(spark, sf)
+    val cents = Similarity.collectCents(Similarity.trainCodebook(base, iters = 2))
+    val coded = Similarity.withQ8(base)
+    val corpus = coded.filter(col("vec_id") >= 5).localCheckpoint(true)
+    val qs = coded.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("q").as("qv"), col("q8").as("qq8"))
+    val edges8 = Similarity.int8Edges(corpus, cents)
+    val entries = Similarity.probeEntries(qs, cents,
+      Similarity.cellMinEntries(corpus.select(col("vec_id"), col("q")), cents))
+      .localCheckpoint(true)
+    def walk(hops: Seq[Int]) = Similarity.graphWalk(corpus, edges8, qs, cents,
+      hops, Some(entries), Similarity.Int8Walk, beam = 16)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"), r.getAs[Long]("dot8")))
+      .sorted.toSeq
+    val snaps = walk(Similarity.SweepHops)
+    assert(snaps.keySet == Similarity.SweepHops.toSet)
+    val byHop = Similarity.SweepHops.map { h =>
+      val got = rows(snaps(h))
+      assert(got == rows(walk(Seq(h))(h)), s"the $h-hop snapshot differs from a $h-hop walk")
+      got
+    }
+    assert(byHop.map(_.length) == byHop.map(_.length).sorted && byHop.head != byHop.last,
+      s"the visited set must grow with depth: ${byHop.map(_.length)}")
+  }
+
   test("s46: the cross-family advisor picks the cheapest floor-meeting stack from BOTH curves") {
     val out = Similarity.queries("s46_index_advisor")(spark, sf).collect()
       .map(r => (r.getAs[String]("family"), r.getAs[Int]("beam"),

@@ -459,4 +459,19 @@ class BinlogTransportSpec extends AnyFunSuite {
       2L -> (3L, "update", 20.0), // updated in the second segment
       3L -> (2L, "insert", 3.0))) // pk=1 deleted; pk=9 never committed
   }
+
+  test("binlog buffer transport: commit trims the decoded tail, a fresh transport replays all") {
+    val id = BinlogBuffers.register(segment1(), segment2)
+    var transport: BinlogTransport = null
+    val stream = new GtidReplayStream(
+      Seq((U, s"binlog:$id")), numPartitions = 2, maxRowsPerBatch = Some(2),
+      transportFactory = b => { transport = GtidReplayStream.defaultTransport(b); transport })
+    val all = transport.fetch().map(_.pos)
+    assert(all.distinct == Vector(1L, 2L, 3L, 4L)) // tx 5 never committed
+    // the cap admits tx 1 (two rows) alone
+    val end = stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit)
+    stream.commit(end)
+    assert(transport.fetch().map(_.pos) == all.filter(_ > 1L))
+    assert(GtidReplayStream.defaultTransport(s"binlog:$id").fetch().map(_.pos) == all)
+  }
 }
