@@ -106,15 +106,27 @@ object CdcPipeline {
     }
   }
 
-  /** Initial bucket count of the state table. 64 keeps the per-bucket
-    * rewrite unit small enough that a typical batch touches a fraction
-    * of the table, while staying far below the small-files regime. The
-    * LIVE count is table state, not code ([[MetaTables.readBucketCount]]
-    * sidecar): [[maybeSplit]] doubles it when buckets outgrow their
-    * target size, so the knob tracks state volume instead of being
-    * provisioned for it up front.
+  /** Initial bucket count of a new state table: one. Every write puts
+    * one file in each bucket it touches, and a file has a fixed cost
+    * (see [[writeBucketed]]), so a small table pays per bucket, not per
+    * row. The LIVE count is table state, not code
+    * ([[MetaTables.readBucketCount]] sidecar): every state write ends
+    * in [[maybeSplit]] against [[targetBucketBytes]], so the count
+    * tracks state volume instead of being provisioned for it up front.
     */
-  val stateBuckets: Int = 64
+  val stateBuckets: Int = 1
+
+  /** Per-bucket byte target: 2 MiB, measured. A COW batch pays, for
+    * each bucket it touches, a fixed cost (a file and a task, 15–35 ms)
+    * plus a rewrite of the bucket's bytes (~6 MiB/s per task), so small
+    * buckets suit small batches and few buckets suit large ones. A
+    * split leaves the mean bucket between half the target and the
+    * target, here 1–2 MiB: on a 4-core host's local FS, over tables of
+    * 1–128 MiB and batches of 10 and 1 000 keys, that layout stayed
+    * within 1.4× of the best bucket count, where one bucket per
+    * 128 MiB cost up to 6× and a fixed 64 buckets up to 2.6×.
+    */
+  private[cdc] val targetBucketBytes: Long = 2L << 20
 
   // NOT underscore-prefixed: Spark's file index treats `_`-prefixed
   // paths as hidden and would skip the partition directories
@@ -133,9 +145,9 @@ object CdcPipeline {
     * MERGE into the state table, then the watermark upsert. Public so
     * the batch spec can drive it directly.
     *
-    * The state parquet is hash-partitioned on `pmod(hash(pk), 64)`
-    * (directory layout `bucket=N/`). A batch only ever
-    * reads-and-rewrites the buckets its keys hash into — partition
+    * The state parquet is hash-partitioned on `pmod(hash(pk), n)`, `n`
+    * the table's bucket count (directory layout `bucket=N/`). A batch
+    * only ever reads-and-rewrites the buckets its keys hash into — partition
     * pruning limits the read, dynamic partition-overwrite limits the
     * write — so apply cost is O(batch ∪ touched-bucket state), not
     * O(state): the Delta/Iceberg copy-on-write MERGE pattern without
@@ -197,10 +209,11 @@ object CdcPipeline {
       batch: DataFrame,
       table: String = "events"
   ): Unit = gatedApply(spark, store, source, batch, table) {
-    val bucketed = batch.withColumn(bucketCol, bucketOf(bucketCount(stateDir)))
+    val n = bucketCount(stateDir)
+    val bucketed = batch.withColumn(bucketCol, bucketOf(n))
 
     def write(df: DataFrame, dynamic: Boolean): Unit =
-      writeBucketed(stateDir, df, dynamic)
+      writeBucketed(stateDir, df, dynamic, n)
 
     MetaTables.readStateSchema(spark, stateDir) match {
       case None =>
@@ -220,7 +233,7 @@ object CdcPipeline {
             dynamic = false)
         } else {
           // steady state: O(batch) COW. Touched buckets = one small
-          // distinct over the batch (≤ stateBuckets values — control
+          // distinct over the batch (≤ bucket-count values — control
           // plane); localCheckpoint breaks lineage from the files the
           // dynamic overwrite replaces, materializing only the touched
           // fraction of state.
@@ -239,6 +252,7 @@ object CdcPipeline {
           removeEmptiedBuckets(stateDir, touched.toSeq, present)
         }
     }
+    maybeSplit(spark, stateDir)
   }
 
   /** Merge-on-read alternative to [[applyBatch]]: append the batch's
@@ -270,16 +284,13 @@ object CdcPipeline {
   ): Unit = MetaTables.readStateSchema(spark, stateDir) match {
     case None => applyBatch(spark, store, stateDir, source, batch, table)
     case Some(old) =>
-      val bucketed = batch.withColumn(bucketCol, bucketOf(bucketCount(stateDir)))
+      val n = bucketCount(stateDir)
+      val bucketed = batch.withColumn(bucketCol, bucketOf(n))
       if (mergedSchema(old, bucketed.schema) != old)
         applyBatch(spark, store, stateDir, source, batch, table)
       else gatedApply(spark, store, source, batch, table) {
-        SchemaEvolution.conform(bucketed, old)
-          .repartition(bucketCount(stateDir), col(bucketCol))
-          .write
-          .mode("append")
-          .partitionBy(bucketCol)
-          .parquet(stateDir)
+        appendBucketed(stateDir, SchemaEvolution.conform(bucketed, old), n)
+        maybeSplit(spark, stateDir)
       }
   }
 
@@ -396,7 +407,8 @@ object CdcPipeline {
           old.fields.find(_.name == c).foreach { f =>
             val st = spark.read.schema(old).parquet(stateDir).localCheckpoint(true)
             writeBucketed(stateDir,
-              st.withColumn(c, lit(null).cast(f.dataType)), dynamic = false)
+              st.withColumn(c, lit(null).cast(f.dataType)), dynamic = false,
+              bucketCount(stateDir))
           }
         case DdlOp.RenameColumn(from, to) =>
           if (old.fieldNames.contains(from) && !old.fieldNames.contains(to)) {
@@ -405,7 +417,7 @@ object CdcPipeline {
             writeBucketed(stateDir,
               st.withColumn(to, col(from))
                 .withColumn(from, lit(null).cast(f.dataType)),
-              dynamic = false)
+              dynamic = false, bucketCount(stateDir))
           }
       }
     }
@@ -474,35 +486,63 @@ object CdcPipeline {
         spark.read.schema(schema).parquet(stateDir)
           .filter(col(bucketCol).isin(targets.map(Integer.valueOf): _*)))
         .localCheckpoint(true)
-      writeBucketed(stateDir, merged, dynamic = true)
+      writeBucketed(stateDir, merged, dynamic = true, bucketCount(stateDir))
       val present =
         merged.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet
       removeEmptiedBuckets(stateDir, targets, present)
+      maybeSplit(spark, stateDir)
       targets
     }
   }
 
   /** Write a state frame in the bucketed layout: one file per bucket
-    * (hash repartition on the partition column), sidecar updated
-    * after the data. Dynamic mode overwrites only the partitions
-    * present in `df`; static mode replaces the whole table.
+    * (hash repartition on the partition column to `buckets` tasks),
+    * then the schema and bucket-count sidecars, so the count on disk is
+    * always the one the data was written with. Dynamic mode overwrites
+    * only the partitions present in `df`; static mode replaces the
+    * whole table.
     *
-    * The shuffle width is pinned to the bucket count — write tasks
-    * align 1:1 with bucket directories (no per-task dynamic-partition
-    * fan-out), which is both the 100 TB layout (a task writes exactly
-    * its bucket's file) and measurably cheaper than a conf-width
-    * repartition that AQE re-plans (~3× on the harness).
+    * A file is the unit cost of a write: on a local FS each one costs
+    * ~15–20 ms of task time whatever its size, because Hadoop's local
+    * FS without native libs forks `chmod` for every directory and file
+    * it creates (per op on a 4-core host: mkdirs 4.9 ms, create 9.8 ms,
+    * setPermission 8.0 ms; 100 rows into 64 bucket dirs 1.5 s vs one
+    * dir 0.2 s). That is why the bucket count follows bytes
+    * ([[maybeSplit]]).
     */
-  private def writeBucketed(stateDir: String, df: DataFrame, dynamic: Boolean): Unit = {
+  private def writeBucketed(
+      stateDir: String, df: DataFrame, dynamic: Boolean, buckets: Int): Unit = {
     val w = df
-      .repartition(bucketCount(stateDir), col(bucketCol))
+      .repartition(buckets, col(bucketCol))
       .write
       .mode("overwrite")
       .partitionBy(bucketCol)
-    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
-      .parquet(stateDir)
-    MetaTables.writeStateSchema(stateDir, df.schema)
+    // a static overwrite deletes the whole directory, MetaTables'
+    // `_graft_*` sidecars included: the schema and bucket count are
+    // rewritten below, the rest (chunk bounds) carried across, also
+    // when the write fails
+    val base = java.nio.file.Paths.get(stateDir)
+    val sidecars =
+      if (dynamic || !java.nio.file.Files.exists(base)) Seq.empty
+      else graft.Fs.listDir(base)
+        .filter(_.getFileName.toString.startsWith("_graft_"))
+        .map(p => p -> java.nio.file.Files.readAllBytes(p))
+    try {
+      (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+        .parquet(stateDir)
+      MetaTables.writeStateSchema(stateDir, df.schema)
+      MetaTables.writeBucketCount(stateDir, buckets)
+    } finally sidecars.foreach { case (p, bytes) =>
+      if (!java.nio.file.Files.exists(p)) java.nio.file.Files.write(p, bytes)
+    }
   }
+
+  /** Append a state frame (MOR deltas, snapshot chunks) in the bucketed
+    * layout: one new file per touched bucket.
+    */
+  private def appendBucketed(stateDir: String, df: DataFrame, buckets: Int): Unit =
+    df.repartition(buckets, col(bucketCol))
+      .write.mode("append").partitionBy(bucketCol).parquet(stateDir)
 
   /** Bootstrap the state table from a full snapshot — the reference's
     * snapshot-then-stream protocol (`docs/全量抓取逻辑.md:12-52`): the
@@ -521,8 +561,10 @@ object CdcPipeline {
       snapshotFeed: DataFrame,
       pos: String
   ): Unit = {
-    val bucketed = snapshotFeed.withColumn(bucketCol, bucketOf(bucketCount(stateDir)))
-    writeBucketed(stateDir, ChangeFeed.latestState(bucketed), dynamic = false)
+    val n = bucketCount(stateDir)
+    val bucketed = snapshotFeed.withColumn(bucketCol, bucketOf(n))
+    writeBucketed(stateDir, ChangeFeed.latestState(bucketed), dynamic = false, n)
+    maybeSplit(spark, stateDir)
     store.upsert(spark, Seq(
       TableWatermark(source, SnapshotJob.schemaName, "events", pos)))
   }
@@ -621,12 +663,12 @@ object CdcPipeline {
     pending.foreach { k =>
       val (cLo, cHi) = (lo + k * width, lo + (k + 1) * width - 1)
       val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
-      val bucketed = chunk.withColumn(bucketCol, bucketOf(bucketCount(stateDir)))
+      val n = bucketCount(stateDir)
+      val bucketed = chunk.withColumn(bucketCol, bucketOf(n))
       if (MetaTables.readStateSchema(spark, stateDir).isEmpty)
         MetaTables.writeStateSchema(stateDir, bucketed.schema)
-      bucketed
-        .repartition(bucketCount(stateDir), col(bucketCol))
-        .write.mode("append").partitionBy(bucketCol).parquet(stateDir)
+      appendBucketed(stateDir, bucketed, n)
+      maybeSplit(spark, stateDir)
       written += 1
       if (written > failAfterChunks)
         throw new IllegalStateException(
@@ -701,39 +743,68 @@ object CdcPipeline {
     }
   }
 
-  /** Double the bucket count: every key in old bucket `b` lands in
-    * `b` or `b + n` under `2n` (hash % n == b ⟹ hash % 2n ∈ {b, b+n}),
-    * so the rewrite is per-bucket LOCAL — each old directory fans out
-    * to exactly two new ones, no cross-bucket data movement. (The
-    * harness implementation routes through one bucketed write for
-    * simplicity; the doubling invariant is what makes the real
-    * per-bucket rewrite possible, and the spec asserts it.)
-    * O(state) once per doubling — amortized like any LSM/extendible-
-    * hashing reorganization; applyBatch stays O(batch) throughout.
+  /** Multiply the bucket count by `factor`: every key in old bucket
+    * `b` lands in some `b + i·n` (`i < factor`) under `n·factor`
+    * (hash % n == b ⟹ hash % (n·factor) ≡ b mod n), so the rewrite is
+    * per-bucket LOCAL — each old directory fans out to `factor` new
+    * ones, no cross-bucket data movement. (The implementation routes
+    * through one bucketed write for simplicity; the fan-out invariant
+    * is what makes the real per-bucket rewrite possible, and the spec
+    * asserts it.) O(state) once per split, in one rewrite however
+    * large the factor — amortized like any LSM/extendible-hashing
+    * reorganization; applyBatch stays O(batch) throughout.
+    *
+    * Since every state write ends in [[maybeSplit]], a split runs on
+    * the apply path, with the same crash window as the additive
+    * schema migration: a static overwrite from a local checkpoint, so
+    * a driver crash between the directory delete and the sidecar
+    * writes that follow the data loses or mis-buckets the state.
+    * Closing that window
+    * (write-then-swap, or a table format with atomic commits) is out
+    * of scope here.
     */
-  def splitBuckets(spark: SparkSession, stateDir: String): Int = {
-    val old = bucketCount(stateDir)
-    val next = old * 2
+  def splitBuckets(spark: SparkSession, stateDir: String, factor: Int = 2): Int = {
+    require(factor >= 2, s"split factor must be at least 2, got $factor")
+    val next = bucketCount(stateDir) * factor
     val schema = MetaTables.readStateSchema(spark, stateDir).getOrElse(
       throw new IllegalStateException(s"no state table at $stateDir"))
     val st = spark.read.schema(schema).parquet(stateDir)
       .drop(bucketCol)
       .withColumn(bucketCol, bucketOf(next))
       .localCheckpoint(true)
-    writeBucketed(stateDir, st, dynamic = false)
-    MetaTables.writeBucketCount(stateDir, next)
+    writeBucketed(stateDir, st, dynamic = false, next)
     next
   }
 
-  /** Split when the largest bucket outgrows `maxBucketBytes` — the
-    * size-tracking knob that keeps per-bucket rewrite units bounded as
-    * state grows. Returns the new bucket count, or None if no split
-    * was needed.
+  /** Split when the largest bucket outgrows `maxBucketBytes`, straight
+    * to the power of two that brings it back under target (but no finer
+    * than the table's total bytes need), in one rewrite. The pipeline
+    * calls this after every state write with the [[targetBucketBytes]]
+    * default; the no-split answer is the driver-side listing alone
+    * (zero Spark jobs). Returns the new bucket count, or None if no
+    * split was needed.
     */
-  def maybeSplit(spark: SparkSession, stateDir: String, maxBucketBytes: Long): Option[Int] = {
-    val stats = bucketFileStats(stateDir)
-    if (stats.isEmpty || stats.map(_._3).max <= maxBucketBytes) None
-    else Some(splitBuckets(spark, stateDir))
+  def maybeSplit(
+      spark: SparkSession,
+      stateDir: String,
+      maxBucketBytes: Long = targetBucketBytes
+  ): Option[Int] = {
+    val bytes = bucketFileStats(stateDir).map(_._3)
+    if (bytes.isEmpty || bytes.max <= maxBucketBytes) None
+    else {
+      // the least power of two p with b / p ≤ target
+      def pow2For(b: Long): Long = {
+        val k = (b + maxBucketBytes - 1) / maxBucketBytes
+        if (k <= 1) 1L else java.lang.Long.highestOneBit(k - 1) << 1
+      }
+      // capped at what the TOTAL needs: a bucket that one key fills
+      // (MOR deltas awaiting compaction) cannot be split smaller, and
+      // must not multiply the table on every write
+      val n = bucketCount(stateDir)
+      val next = math.min(n * pow2For(bytes.max), pow2For(bytes.sum))
+      if (next / n < 2) None
+      else Some(splitBuckets(spark, stateDir, (next / n).toInt))
+    }
   }
 
   /** Apply flavor for the consumer loop — the reference's single

@@ -18,7 +18,9 @@ import graft.model.{GtidRange, GtidSet}
   *   - packets frame as `[payload-length u3][sequence-id u1][payload]`,
   *     little-endian;
   *   - `COM_BINLOG_DUMP_GTID` payload: command byte 0x1e, flags u2
-  *     (0x04 = BINLOG_THROUGH_GTID), server-id u4, filename-length
+  *     (0x04 = BINLOG_THROUGH_GTID; 0x01 = BINLOG_DUMP_NON_BLOCK, without
+  *     which the server holds the connection open for new events
+  *     instead of ending the stream with EOF), server-id u4, filename-length
   *     u4 + filename, binlog-pos u8, gtid-data-size u4, then the
   *     GTID set in binary form;
   *   - binary GTID set: n_sids u8; per sid 16 uuid bytes,
@@ -31,6 +33,7 @@ object BinlogWire {
 
   val ComBinlogDumpGtid = 0x1e
   val BinlogThroughGtid = 0x04
+  val BinlogDumpNonBlock = 0x01
 
   private def w2(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
     b.write(v & 0xff); b.write((v >> 8) & 0xff)

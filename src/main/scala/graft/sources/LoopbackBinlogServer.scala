@@ -20,7 +20,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *      archive's events as `[0x00][event]` packets, SKIPPING
   *      transactions covered by the request's GTID set — the server
   *      half of the resume protocol;
-  *   4. finish with an EOF packet.
+  *   4. finish with an EOF packet if the request's flags carry
+  *      `BINLOG_DUMP_NON_BLOCK`; otherwise hold the connection open at
+  *      the binlog tip until the client hangs up, as a real master does
+  *      (it would stream new events there as they commit).
   *
   * `archive` is any [[BinlogWriter]]-encoded binlog file and is
   * swappable at runtime (the binlog "growing");
@@ -104,7 +107,9 @@ final class LoopbackBinlogServer(
       if (!gate.exists { case (u, g) => req.set.contains(u, g) })
         spans.foreach(sendEvent)
     }
-    write(out, seq, Array[Byte](0xfe.toByte, 0, 0, 0, 0)) // EOF
+    if ((req.flags & BinlogWire.BinlogDumpNonBlock) != 0)
+      write(out, seq, Array[Byte](0xfe.toByte, 0, 0, 0, 0)) // EOF
+    else while (in.read() >= 0) () // blocking dump: hold until hang-up
   }
 }
 

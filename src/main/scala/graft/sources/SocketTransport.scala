@@ -92,8 +92,12 @@ final class SocketTransport(
           throw new TransportException(s"auth failed ($code): $msg")
       }
 
-      // ---- command phase: dump everything above the watermark
-      writePacket(out, 0, BinlogWire.comBinlogDumpGtid(serverId, watermark))
+      // ---- command phase: dump everything above the watermark, and
+      // NON_BLOCK so the server ends the stream with EOF at the binlog
+      // tip (without it a real master holds the connection for new
+      // events and this poll would end only at the read timeout)
+      writePacket(out, 0, BinlogWire.comBinlogDumpGtid(serverId, watermark,
+        flags = BinlogWire.BinlogThroughGtid | BinlogWire.BinlogDumpNonBlock))
 
       // ---- stream phase: reassemble magic + event bytes, one segment
       val seg = new java.io.ByteArrayOutputStream()

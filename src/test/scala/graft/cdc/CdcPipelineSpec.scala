@@ -73,6 +73,39 @@ class CdcPipelineSpec extends AnyFunSuite {
     spark.read.parquet(dir).select("pk", "pos", "op").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
+  /** Bucket count the per-bucket specs preset: a new table starts at
+    * one bucket, so specs about touched, cold or emptied buckets write
+    * the bucket-count sidecar before the first apply.
+    */
+  private val Preset = 8
+  private def presetBuckets(dir: String): Unit = MetaTables.writeBucketCount(dir, Preset)
+
+  /** Run `body`; return the Spark jobs it started and the plans of the
+    * parquet writes (insert commands) it executed. Listener events
+    * post asynchronously, hence the settle wait.
+    */
+  private def sparkWork(body: => Unit): (Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.add(x.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get(), writes.toArray(Array.empty[String]).toSeq)
+  }
+
   private def maxMtime(dir: String): Long = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -171,6 +204,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
     // batch 1: the whole feed — populates one bucket per pk (mod
     // hash collisions)
+    presetBuckets(s"$base/state")
     CdcPipeline.applyBatch(spark, store, s"$base/state", "src", full)
     def bucketFiles(): Map[String, Long] = {
       def walk(f: File): Seq[File] =
@@ -360,6 +394,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val base = s"target/tmp/cdcsplit-${System.nanoTime()}"
     val store = new WatermarkStore(s"$base/wm")
     val dir = s"$base/state"
+    presetBuckets(dir)
     CdcPipeline.applyBatch(spark, store, dir, "src",
       ChangeFeed.fromEvents(Tables.events(spark, sf)))
     val before = stateRows(dir)
@@ -369,16 +404,17 @@ class CdcPipelineSpec extends AnyFunSuite {
 
     // under-threshold: no split
     assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = Long.MaxValue).isEmpty)
-    assert(CdcPipeline.bucketCount(dir) == CdcPipeline.stateBuckets)
+    assert(CdcPipeline.bucketCount(dir) == Preset)
 
-    // 1-byte threshold forces the split: count doubles, rows unchanged,
-    // and the doubling invariant holds (old bucket b fans out only to
-    // b and b + n)
-    assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = 1L)
-      .contains(CdcPipeline.stateBuckets * 2))
-    assert(CdcPipeline.bucketCount(dir) == CdcPipeline.stateBuckets * 2)
+    // a threshold at which the table needs twice its buckets forces the
+    // split: count doubles, rows unchanged, and the doubling invariant
+    // holds (old bucket b fans out only to b and b + n)
+    val total = CdcPipeline.bucketFileStats(dir).map(_._3).sum
+    assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = total / (2 * Preset) + 1)
+      .contains(Preset * 2))
+    assert(CdcPipeline.bucketCount(dir) == Preset * 2)
     assert(stateRows(dir) == before)
-    val n = CdcPipeline.stateBuckets
+    val n = Preset
     val invariantViolations = spark.read
       .schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
       .select(col("pk"), col("bucket"))
@@ -408,6 +444,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val (c1, c2) = (q1.toLong, q2.toLong)
 
     // base via COW, then two O(batch) delta appends
+    presetBuckets(dir)
     CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= c1))
     CdcPipeline.appendDeltas(spark, store, dir, "src",
       full.filter(col("pos") > c1 && col("pos") <= c2))
@@ -675,24 +712,17 @@ class CdcPipelineSpec extends AnyFunSuite {
     val base = s"target/tmp/cdccompactnoop-${System.nanoTime()}"
     val store = new WatermarkStore(s"$base/wm")
     val dir = s"$base/state"
+    presetBuckets(dir)
     CdcPipeline.applyBatch(spark, store, dir, "src",
       ChangeFeed.fromEvents(Tables.events(spark, sf)))
     // COW wrote one file per bucket — every bucket is under any
     // threshold ≥ 1, so compact must decide "nothing to do" from the
     // directory listing alone, without launching a single job (the
     // O(state) row-count scan this control path used to pay)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = sparkWork {
       assert(CdcPipeline.compact(spark, dir, maxFilesPerBucket = 4).isEmpty)
-      Thread.sleep(1000) // listener events post asynchronously
-      assert(jobs.get() == 0,
-        s"no-op compact must not launch Spark jobs (launched ${jobs.get()})")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"no-op compact must not launch Spark jobs (launched $jobs)")
     // and a real compact reads only the over-threshold buckets: force
     // deltas into one bucket, compact, verify cold-file mtimes in the
     // existing MOR test cover that path
@@ -719,6 +749,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     // must redistribute every key-version (base rows, delta rows,
     // tombstones) into the doubled layout so read-time latest-wins
     // still resolves each key from exactly one bucket
+    presetBuckets(dir)
     CdcPipeline.applyBatch(spark, store, dir, "src",
       full.filter(col("pos") <= 500))
     CdcPipeline.appendDeltas(spark, store, dir, "src",
@@ -728,7 +759,7 @@ class CdcPipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(before == expectedState())
     val next = CdcPipeline.splitBuckets(spark, dir)
-    assert(next == CdcPipeline.stateBuckets * 2)
+    assert(next == Preset * 2)
     assert(CdcPipeline.readState(spark, dir)
       .select("pk", "pos", "op").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet == before,
@@ -819,9 +850,11 @@ class CdcPipelineSpec extends AnyFunSuite {
       rows.toSeq.toDF("pos", "pk", "op")
         .select(col("pos"), lit(new java.sql.Timestamp(0L)).as("ts"), col("pk"),
           col("op"), lit(1.0).as("value"), lit("{}").as("props"))
-    // two keys in (very likely) different buckets
+    // two keys in different buckets
+    presetBuckets(dir)
     CdcPipeline.applyBatch(spark, store, dir, "src",
       feed((1L, 10L, "insert"), (2L, 11L, "insert")))
+    assert(CdcPipeline.bucketFileStats(dir).size == 2, "keys 10 and 11 must not share a bucket")
     // delta deletes key 10 — merge-on-read must hide it immediately
     CdcPipeline.appendDeltas(spark, store, dir, "src", feed((3L, 10L, "delete")))
     assert(CdcPipeline.readState(spark, dir).select("pk").as[Long].collect().toSet
@@ -834,5 +867,162 @@ class CdcPipelineSpec extends AnyFunSuite {
     val buckets = CdcPipeline.stateMetrics(spark, dir, withRows = true).collect()
     assert(buckets.forall(_.getAs[Long]("n_rows") > 0),
       "no bucket directory may survive with zero live rows")
+  }
+
+  test("a fresh table starts at one bucket: a COW batch, a MOR append and a snapshot chunk each write one file") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = s"target/tmp/cdconefile-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    def files(d: String): Int = CdcPipeline.bucketFileStats(d).map(_._2).sum
+    CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= 500))
+    assert(CdcPipeline.bucketCount(dir) == 1)
+    assert(files(dir) == 1, "the first COW batch writes one file")
+    CdcPipeline.appendDeltas(spark, store, dir, "src", full.filter(col("pos") > 500))
+    assert(files(dir) == 2, "a MOR append adds one file")
+    assert(CdcPipeline.readState(spark, dir).select("pk", "pos", "op").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet == expectedState())
+    val snapDir = s"$base/snap"
+    val snap = Tables.customer(spark, sf).select(
+      lit(0L).as("pos"),
+      lit(new java.sql.Timestamp(0L)).as("ts"),
+      col("c_custkey").as("pk"),
+      lit("insert").as("op"),
+      col("c_acctbal").cast("double").as("value"))
+    assert(CdcPipeline.resumableSnapshot(spark, new WatermarkStore(s"$base/snapwm"), snapDir,
+      "src", snap, chunkBy = "pk", numChunks = 3, pos = "src:1-1").length == 3)
+    assert(files(snapDir) == 3, "each snapshot chunk adds one file")
+    assert(CdcPipeline.readState(spark, snapDir).count() == snap.count())
+  }
+
+  test("a no-op split check is FS-metadata only: zero Spark jobs") {
+    val base = s"target/tmp/cdcsplitnoop-${System.nanoTime()}"
+    val dir = s"$base/state"
+    CdcPipeline.applyBatch(spark, new WatermarkStore(s"$base/wm"), dir, "src",
+      ChangeFeed.fromEvents(Tables.events(spark, sf)))
+    val largest = CdcPipeline.bucketFileStats(dir).map(_._3).max
+    val (jobs, _) = sparkWork {
+      assert(CdcPipeline.maybeSplit(spark, dir).isEmpty, "far below the default target")
+      assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = largest).isEmpty,
+        "a bucket AT the target does not split")
+    }
+    assert(jobs == 0, s"a no-op split check must not launch Spark jobs (launched $jobs)")
+    assert(CdcPipeline.bucketCount(dir) == 1)
+  }
+
+  test("the pipeline splits on its own: a COW batch, then MOR deltas, past the bucket target") {
+    import org.apache.spark.sql.functions._
+    val base = s"target/tmp/cdcsplitauto-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    // 1 KiB of hex per row (eight sha2-512 digests): parquet cannot
+    // shrink it, so a batch of 1.5 targets' worth of rows outgrows one
+    // bucket whatever the encoding
+    val rows = CdcPipeline.targetBucketBytes * 3 / 2 / 1024
+    def feed(from: Long, op: String) = spark.range(rows).select(
+      (col("id") + from).as("pos"),
+      lit(new java.sql.Timestamp(0L)).as("ts"),
+      col("id").as("pk"),
+      lit(op).as("op"),
+      col("id").cast("double").as("value"),
+      concat((0 until 8).map(i => sha2(concat(col("id").cast("string"), lit(s"$from-$i")), 512)): _*)
+        .as("props"))
+    def largest = CdcPipeline.bucketFileStats(dir).map(_._3).max
+    CdcPipeline.applyBatch(spark, store, dir, "src", feed(1, "insert"))
+    assert(CdcPipeline.bucketCount(dir) == 2, "1.5 targets need two buckets")
+    assert(largest <= CdcPipeline.targetBucketBytes)
+    // the deltas double every bucket: 3 targets in all need four
+    CdcPipeline.appendDeltas(spark, store, dir, "src", feed(rows + 1, "update"))
+    assert(CdcPipeline.bucketCount(dir) == 4, "3 targets need four buckets")
+    assert(largest <= CdcPipeline.targetBucketBytes)
+    val live = CdcPipeline.readState(spark, dir)
+    assert(live.count() == rows)
+    assert(live.filter(col("op") =!= "update").count() == 0, "latest wins after the split")
+  }
+
+  test("a write past the bucket target splits in one rewrite to the needed power of two") {
+    import org.apache.spark.sql.functions._
+    val base = s"target/tmp/cdcsplitpow-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    val Array(q) = full.stat.approxQuantile("pos", Array(0.5), 0.0)
+    val cut = q.toLong
+    val first = full.filter(col("pos") <= cut)
+    def state(): Set[(Long, Long, String)] =
+      CdcPipeline.readState(spark, dir).select("pk", "pos", "op").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    // the latest-wins model of the feed up to `p`
+    def model(p: Long): Set[(Long, Long, String)] =
+      ChangeFeed.latestState(full.filter(col("pos") <= p))
+        .select("pk", "pos", "op").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    // 1. under a target of a seventh of the one-bucket file the first
+    // write leaves, the table needs 8 buckets and gets there in one
+    // rewrite, not 1 → 2 → 4 → 8
+    CdcPipeline.applyBatch(spark, store, dir, "src", first)
+    assert(CdcPipeline.bucketCount(dir) == 1, "far below the default target")
+    val bytes = CdcPipeline.bucketFileStats(dir).map(_._3).sum
+    def stateWrites(plans: Seq[String]): Int = plans.count(_.contains(dir))
+    val (_, writes) = sparkWork {
+      assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = bytes / 7).contains(8))
+    }
+    assert(CdcPipeline.bucketCount(dir) == 8)
+    assert(stateWrites(writes) == 1,
+      s"ONE split rewrite (saw ${stateWrites(writes)} state writes)")
+    assert(CdcPipeline.bucketFileStats(dir).forall(_._2 == 1))
+    assert(state() == model(cut))
+
+    // 2. an explicit check on a table carrying MOR deltas: the total
+    // needs 32 buckets, so 8 → 32 in one rewrite, each old bucket b
+    // fanning out only to b + 8i, and merge-on-read state unchanged
+    CdcPipeline.appendDeltas(spark, store, dir, "src", full.filter(col("pos") > cut))
+    assert(CdcPipeline.bucketCount(dir) == 8, "far below the default target")
+    val before = state()
+    assert(before == expectedState())
+    val total = CdcPipeline.bucketFileStats(dir).map(_._3).sum
+    val (_, splitWrites) = sparkWork {
+      assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = total / 31).contains(32))
+    }
+    assert(stateWrites(splitWrites) == 1, s"one rewrite (saw ${stateWrites(splitWrites)})")
+    assert(state() == before)
+    val rows = spark.read.schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
+    assert(rows.filter(col("bucket") =!= pmod(hash(col("pk")), lit(32))).count() == 0)
+    assert(rows.filter(col("bucket") % 8 =!= pmod(hash(col("pk")), lit(8))).count() == 0)
+
+    // 3. a static rewrite after the split (the additive schema
+    // migration) keeps the table's bucket count: the sidecar survives
+    CdcPipeline.applyBatch(spark, store, dir, "src",
+      full.filter(col("pk").isin(0L, 1L)).withColumn("pos", col("pos") + 10000)
+        .withColumn("region", lit("emea")))
+    assert(CdcPipeline.bucketCount(dir) == 32)
+    val migrated = spark.read.schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
+    assert(migrated.filter(col("bucket") =!= pmod(hash(col("pk")), lit(32))).count() == 0)
+  }
+
+  test("a split between resumable-snapshot runs keeps the pinned chunk bounds") {
+    import org.apache.spark.sql.functions.{col, max}
+    val base = s"target/tmp/cdcsnapsplit-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    val maxPk = full.agg(max(col("pk"))).head().getLong(0)
+    def snapshot(feed: org.apache.spark.sql.DataFrame, failAfter: Int = Int.MaxValue) =
+      CdcPipeline.resumableSnapshot(spark, store, dir, "src", feed,
+        chunkBy = "pk", numChunks = 4, pos = "src:1-1", failAfterChunks = failAfter)
+    // a crashed snapshot, then a split before the resume: the split's
+    // static rewrite must carry the pinned chunk bounds across
+    intercept[IllegalStateException](snapshot(full, failAfter = 2))
+    val bytes = CdcPipeline.bucketFileStats(dir).map(_._3).sum
+    assert(CdcPipeline.maybeSplit(spark, dir, maxBucketBytes = bytes / 3).contains(4))
+    // the pinned bounds survived the split: a drifted resume still fails
+    val e = intercept[IllegalStateException](snapshot(full.filter(col("pk") < maxPk)))
+    assert(e.getMessage.contains("drifted"))
+    snapshot(full)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("pk", "pos", "op").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(rows(CdcPipeline.readState(spark, dir)) == rows(ChangeFeed.latestState(full)))
   }
 }

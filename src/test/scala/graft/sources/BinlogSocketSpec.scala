@@ -268,6 +268,77 @@ class BinlogSocketSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  /** One raw dump conversation with `flags`: the event packets served,
+    * and whether the stream then ended with EOF (false: the server
+    * held the connection open until the read timed out).
+    */
+  private def rawDump(port: Int, flags: Int): (Int, Boolean) = {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(1500)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def read(): Array[Byte] = BinlogWire.readLogicalPacket { n =>
+        val buf = new Array[Byte](n)
+        var got = 0
+        while (got < n) {
+          val r = in.read(buf, got, n - got)
+          if (r < 0) throw new java.io.IOException("server closed")
+          got += r
+        }
+        buf
+      }._2
+      def write(seq: Int, payload: Array[Byte]): Unit = {
+        out.write(BinlogWire.framePackets(seq, payload)); out.flush()
+      }
+      val hello = MysqlAuth.parseHandshakeV10(read())
+      write(1, MysqlAuth.encodeHandshakeResponse41("repl",
+        MysqlAuth.scramble("s3cret", hello.salt)))
+      assert(MysqlAuth.parseAuthResult(read()).isInstanceOf[MysqlAuth.AuthOk])
+      write(0, BinlogWire.comBinlogDumpGtid(1001L, graft.model.GtidSet.empty, flags = flags))
+      var events = 0
+      var eof: Option[Boolean] = None
+      while (eof.isEmpty) {
+        try {
+          val p = read()
+          if ((p(0) & 0xff) == 0xfe) eof = Some(true) else events += 1
+        } catch { case _: java.net.SocketTimeoutException => eof = Some(false) }
+      }
+      (events, eof.get)
+    } finally sock.close()
+  }
+
+  test("the loopback holds a dump without BINLOG_DUMP_NON_BLOCK open, like a real master") {
+    val feed = feedRows().take(5)
+    val server = new LoopbackBinlogServer(
+      "repl", MysqlAuth.storedHash("s3cret"), encodeArchive(feed))
+    try {
+      val events = 1 + 4 * feed.length // FDE + 4 events per transaction
+      assert(rawDump(server.port, BinlogWire.BinlogThroughGtid) == ((events, false)),
+        "a blocking dump serves every event, then waits for more: no EOF")
+      assert(rawDump(server.port,
+        BinlogWire.BinlogThroughGtid | BinlogWire.BinlogDumpNonBlock) == ((events, true)),
+        "a non-blocking dump ends at the binlog tip with EOF")
+    } finally server.stop()
+  }
+
+  test("SocketTransport asks for a non-blocking dump: a fetch ends at the tip, not at the read timeout") {
+    val feed = feedRows().take(5)
+    val server = new LoopbackBinlogServer(
+      "repl", MysqlAuth.storedHash("s3cret"), encodeArchive(feed))
+    try {
+      // a blocking dump would hold the connection until this timeout
+      // and fail the fetch with a TransportException
+      val t = new SocketTransport("127.0.0.1", server.port, "repl", "s3cret",
+        readTimeoutMs = 3000)
+      val t0 = System.nanoTime()
+      assert(t.fetch() == feed)
+      assert(t.fetch() == feed, "a covered re-fetch ends at the tip too")
+      assert((System.nanoTime() - t0) / 1000000 < 3000,
+        "both fetches must end on EOF, well inside one read timeout")
+    } finally server.stop()
+  }
+
   test("wrong password: classified auth failure, server never learns the password") {
     val server = new LoopbackBinlogServer(
       "repl", MysqlAuth.storedHash("s3cret"), encodeArchive(feedRows().take(5)))
