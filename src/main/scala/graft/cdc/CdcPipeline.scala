@@ -141,31 +141,6 @@ object CdcPipeline {
     */
   private def bucketOf(n: Int): Column = pmod(hash(col("pk")), lit(n))
 
-  /** Apply one micro-batch: GTID-gate, then a bucketed copy-on-write
-    * MERGE into the state table, then the watermark upsert. Public so
-    * the batch spec can drive it directly.
-    *
-    * The state parquet is hash-partitioned on `pmod(hash(pk), n)`, `n`
-    * the table's bucket count (directory layout `bucket=N/`). A batch
-    * only ever reads-and-rewrites the buckets its keys hash into — partition
-    * pruning limits the read, dynamic partition-overwrite limits the
-    * write — so apply cost is O(batch ∪ touched-bucket state), not
-    * O(state): the Delta/Iceberg copy-on-write MERGE pattern without
-    * the dependency. Untouched buckets' files are never opened: the
-    * pruned read takes its schema from the sidecar (no footer
-    * inference), and the dynamic overwrite replaces only the
-    * partitions present in the written frame.
-    *
-    * Schema lives in a tiny sidecar file (the single-table analog of
-    * Delta's transaction-log schema — parquet footers can't speak for
-    * a table whose buckets were written at different times). A batch
-    * arriving with an evolved schema — the downstream meaning of a
-    * gated additive DDL event, which the reference drops in its no-op
-    * `OnDDL` (`internal/cannal/incremental_event.go:31-33`) — triggers
-    * a one-off full-table migration ([[SchemaEvolution.conform]]:
-    * old rows null-fill new columns), amortized O(state) once per DDL;
-    * every schema-stable batch takes the O(batch) COW path.
-    */
   /** Run `body` only if the batch's GTID set is non-empty and not
     * already covered by the watermark; advance the watermark after.
     * The shared dedupe/resume protocol of every apply flavor.
@@ -201,6 +176,31 @@ object CdcPipeline {
       }
     }
 
+  /** Apply one micro-batch: GTID-gate, then a bucketed copy-on-write
+    * MERGE into the state table, then the watermark upsert. Public so
+    * the batch spec can drive it directly.
+    *
+    * The state parquet is hash-partitioned on `pmod(hash(pk), n)`, `n`
+    * the table's bucket count (directory layout `bucket=N/`). A batch
+    * only ever reads-and-rewrites the buckets its keys hash into — partition
+    * pruning limits the read, dynamic partition-overwrite limits the
+    * write — so apply cost is O(batch ∪ touched-bucket state), not
+    * O(state): the Delta/Iceberg copy-on-write MERGE pattern without
+    * the dependency. Untouched buckets' files are never opened: the
+    * pruned read takes its schema from the sidecar (no footer
+    * inference), and the dynamic overwrite replaces only the
+    * partitions present in the written frame.
+    *
+    * Schema lives in a tiny sidecar file (the single-table analog of
+    * Delta's transaction-log schema — parquet footers can't speak for
+    * a table whose buckets were written at different times). A batch
+    * arriving with an evolved schema — the downstream meaning of a
+    * gated additive DDL event, which the reference drops in its no-op
+    * `OnDDL` (`internal/cannal/incremental_event.go:31-33`) — triggers
+    * a one-off full-table migration ([[SchemaEvolution.conform]]:
+    * old rows null-fill new columns), amortized O(state) once per DDL;
+    * every schema-stable batch takes the O(batch) COW path.
+    */
   def applyBatch(
       spark: SparkSession,
       store: WatermarkStore,
@@ -629,7 +629,7 @@ object CdcPipeline {
       }
       // the sidecar must still exist — a completed empty snapshot is a
       // READABLE empty state table, not a "no state table" error
-      if (MetaTables.readStateSchema(spark, stateDir).isEmpty)
+      if (!MetaTables.hasStateSchema(stateDir))
         MetaTables.writeStateSchema(stateDir,
           snapshotFeed.withColumn(bucketCol, bucketOf(bucketCount(stateDir))).schema)
       store.upsert(spark, Seq(
@@ -665,7 +665,7 @@ object CdcPipeline {
       val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
       val n = bucketCount(stateDir)
       val bucketed = chunk.withColumn(bucketCol, bucketOf(n))
-      if (MetaTables.readStateSchema(spark, stateDir).isEmpty)
+      if (!MetaTables.hasStateSchema(stateDir))
         MetaTables.writeStateSchema(stateDir, bucketed.schema)
       appendBucketed(stateDir, bucketed, n)
       maybeSplit(spark, stateDir)

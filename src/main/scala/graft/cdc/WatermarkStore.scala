@@ -1,13 +1,18 @@
 package graft.cdc
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 
 import graft.model.GtidSet
 
-/** Read-a-table-that-may-not-exist-yet, shared by the watermark store
-  * and the pipeline's state table. `None` covers exactly the two
+/** Read-a-table-that-may-not-exist-yet, shared by the incremental
+  * rollup and top-k state tables ([[AggMaintenance]],
+  * [[TopkMaintenance]]). `None` covers exactly the two
   * recoverable "no data yet" shapes: the path is absent
   * (PATH_NOT_FOUND — first ever run) or present but file-less
   * (UNABLE_TO_INFER_SCHEMA — an overwrite was torn mid-write, leaving
@@ -67,6 +72,13 @@ private[cdc] object MetaTables {
       }
     }
   }
+
+  /** True iff the schema sidecar exists: the driver-side test for "no
+    * state table yet" where a caller only writes the sidecar when absent
+    * — unlike [[readStateSchema]], never falls back to a footer read
+    * (a Spark job).
+    */
+  def hasStateSchema(dir: String): Boolean = java.nio.file.Files.exists(sidecar(dir))
 
   def writeStateSchema(dir: String, schema: StructType): Unit = {
     val p = sidecar(dir)
@@ -162,46 +174,59 @@ object WatermarkGate {
   * called from `fullamount_service.go:143` and
   * `data_source.go:96-102`).
   *
-  * Backed by a small parquet table keyed (source, schema, table).
-  * Upsert MERGES GTID sets (interval union) rather than overwriting —
-  * positions only ever grow, so a replayed upsert is idempotent.
+  * Backed by one JSON file, `<path>/watermarks.json`, holding every
+  * (source, schema, table) row — the analog of Structured Streaming's
+  * driver-side offset/commit log files. Upsert MERGES GTID sets
+  * (interval union) rather than overwriting — positions only ever
+  * grow, so a replayed upsert is idempotent.
   *
-  * The control-plane collect here is deliberate and scale-safe: this
-  * table has one row per (source, schema, table) — thousands at most
-  * (the reference keeps it in a metadata MySQL). Data-plane state
-  * never flows through it.
+  * Each upsert writes the merged rows to a temp file beside the log
+  * and renames it into place (`ATOMIC_MOVE`): a reader sees the old
+  * file or the new one, never a torn or missing one, and a crash
+  * between the write and the rename leaves only a stray temp file that
+  * no reader opens and the next upsert overwrites. No Spark job, no
+  * commit protocol. java.nio is the same local-FS seam as the
+  * [[MetaTables]] sidecars; a cluster deployment swaps in the Hadoop
+  * FileSystem API (rename-based atomic create) there.
+  *
+  * The control-plane state here is deliberately driver-resident: one
+  * row per (source, schema, table) — thousands at most (the reference
+  * keeps it in a metadata MySQL). Data-plane state never flows through
+  * it.
   */
 final class WatermarkStore(path: String) {
+  import WatermarkStore._
 
-  /** In-process cache of the table's rows. The store is single-writer
+  private val dir = Paths.get(path)
+  private val file = dir.resolve(FileName)
+
+  /** In-process cache of the file's rows. The store is single-writer
     * control-plane state (the contract [[upsert]] already documents),
     * so within one store instance every read after the first — and
-    * after every upsert — is answered from memory instead of a parquet
-    * job. A fresh instance (restart, another process's run) re-reads
-    * disk; the reference makes the same session-cache assumption of
-    * its metadata MySQL connection.
+    * after every upsert — is answered from memory. A fresh instance
+    * (restart, another process's run) re-reads disk; the reference
+    * makes the same session-cache assumption of its metadata MySQL
+    * connection.
     */
   @volatile private var cached: Option[Seq[TableWatermark]] = None
 
-  private def rows(spark: SparkSession): Seq[TableWatermark] =
+  private def rows: Seq[TableWatermark] =
     cached.getOrElse {
-      import spark.implicits._
-      val r = MetaTables.readIfExists(spark, path) match {
-        case Some(df) => df.as[TableWatermark].collect().toSeq
-        case None => Seq.empty
-      }
+      val r =
+        if (Files.exists(file)) json.readValue(file.toFile, classOf[Array[TableWatermark]]).toSeq
+        else Seq.empty
       cached = Some(r)
       r
     }
 
   def read(spark: SparkSession): Dataset[TableWatermark] = {
     import spark.implicits._
-    rows(spark).toDS()
+    rows.toDS()
   }
 
   /** Current watermark for one table (empty set when absent). */
   def watermark(spark: SparkSession, source: String, schema: String, table: String): GtidSet =
-    rows(spark)
+    rows
       .find(w => w.source == source && w.schema == schema && w.table == table)
       .map(w => GtidSet.parse(w.pos))
       .getOrElse(GtidSet.empty)
@@ -215,14 +240,13 @@ final class WatermarkStore(path: String) {
     candidate.subsetOf(watermark(spark, source, schema, table))
 
   /** Select-then-upsert (`tablemeta.go:64-82`): merge the new position
-    * into the existing row's GTID set, insert when absent. Written
-    * with overwrite-after-read — safe because the table is tiny,
-    * single-writer control-plane state (same assumption the reference
-    * makes of its metadata DB).
+    * into the existing row's GTID set, insert when absent, then replace
+    * the file atomically (write temp, rename over). Read-merge-replace
+    * is safe because this is single-writer control-plane state (same
+    * assumption the reference makes of its metadata DB).
     */
   def upsert(spark: SparkSession, newRows: Seq[TableWatermark]): Unit = {
-    import spark.implicits._
-    val merged = (rows(spark) ++ newRows)
+    val merged = (rows ++ newRows)
       .groupBy(w => (w.source, w.schema, w.table))
       .map { case ((src, sc, tb), ws) =>
         val set = ws.foldLeft(GtidSet.empty)((acc, w) => acc.merge(GtidSet.parse(w.pos)))
@@ -230,7 +254,17 @@ final class WatermarkStore(path: String) {
       }
       .toSeq
       .sortBy(w => (w.source, w.schema, w.table))
-    merged.toDS().coalesce(1).write.mode("overwrite").parquet(path)
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(TmpName)
+    Files.write(tmp, json.writeValueAsBytes(merged))
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     cached = Some(merged)
   }
+}
+
+object WatermarkStore {
+  private[cdc] val FileName = "watermarks.json"
+  private[cdc] val TmpName = s".$FileName.tmp"
+
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.Tables
 
 /** End-to-end checkpointed streaming: readStream over the events
-  * parquet → foreachBatch gated apply → state + watermark tables.
+  * parquet → foreachBatch gated apply → state table + watermark file.
   * Covers the three resume-protocol behaviors: first run applies,
   * checkpoint resume reprocesses nothing, and a replay from a fresh
   * checkpoint is GTID-gated into a no-op (`docs/全量抓取逻辑.md:44-52`).
@@ -909,6 +909,52 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
     assert(jobs == 0, s"a no-op split check must not launch Spark jobs (launched $jobs)")
     assert(CdcPipeline.bucketCount(dir) == 1)
+  }
+
+  test("the watermark commit is driver-side: upsert starts no Spark job, applies write only state") {
+    import org.apache.spark.sql.functions.col
+    val base = s"target/tmp/cdcwmcommit-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val wm = new File(s"$base/wm").getAbsolutePath
+    val store = new WatermarkStore(wm)
+    val (upsertJobs, _) = sparkWork {
+      store.upsert(spark, Seq(TableWatermark("other", SnapshotJob.schemaName, "events", "other:1-3")))
+    }
+    assert(upsertJobs == 0, s"an upsert must not launch Spark jobs (launched $upsertJobs)")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    val (_, writes) = sparkWork {
+      CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= 500))
+      CdcPipeline.appendDeltas(spark, store, dir, "src", full.filter(col("pos") > 500))
+    }
+    assert(writes.size == 2, s"one COW write and one MOR append expected, got ${writes.size}")
+    assert(writes.forall(_.contains(new File(dir).getAbsolutePath)), "every write targets the state")
+    assert(!writes.exists(_.contains(wm)), "no parquet write under the watermark path")
+    assert(new WatermarkStore(wm).watermark(spark, "src", SnapshotJob.schemaName, "events") ==
+      CdcPipeline.batchGtidSet(full, "src"))
+  }
+
+  test("a 2-chunk resumableSnapshot into a fresh directory runs exactly its 2 chunk appends") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = s"target/tmp/cdcsnapwrites-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val snap = Tables.customer(spark, sf).select(
+      lit(0L).as("pos"),
+      lit(new java.sql.Timestamp(0L)).as("ts"),
+      col("c_custkey").as("pk"),
+      lit("insert").as("op"),
+      col("c_acctbal").cast("double").as("value")).localCheckpoint(true)
+    val (_, writes) = sparkWork {
+      assert(CdcPipeline.resumableSnapshot(spark, store, dir, "src", snap,
+        chunkBy = "pk", numChunks = 2, pos = "src:1-7") == Seq(0, 1))
+    }
+    assert(writes.size == 2, s"the two chunk appends and nothing else, got ${writes.size}")
+    assert(writes.forall(_.contains(new File(dir).getAbsolutePath)))
+    val reopened = new WatermarkStore(s"$base/wm")
+    assert(reopened.watermark(spark, "src", SnapshotJob.schemaName, "events").serialize == "src:1-7")
+    assert(reopened.watermark(spark, "src", SnapshotJob.schemaName, "events#chunks")
+      .serialize == "chunks:0-1")
+    assert(CdcPipeline.readState(spark, dir).count() == snap.count())
   }
 
   test("the pipeline splits on its own: a COW batch, then MOR deltas, past the bucket target") {

@@ -92,6 +92,20 @@ class SnapshotJobSpec extends AnyFunSuite {
     reopened.upsert(spark, Seq(TableWatermark("s", "main", "t", "u:12-14")))
     assert(new WatermarkStore(path).watermark(spark, "s", "main", "t")
       .serialize == "u:1-10:12-14")
+    // a crash between the temp-file write and the rename leaves a stray
+    // (here torn) temp file: no reader opens it, and the next upsert
+    // overwrites it and renames it into place
+    val tmp = java.nio.file.Paths.get(path, WatermarkStore.TmpName)
+    java.nio.file.Files.write(tmp,
+      """[{"source":"s","schema":"main","table":"t","pos":"u:1-9""".getBytes("UTF-8"))
+    val afterCrash = new WatermarkStore(path)
+    assert(afterCrash.watermark(spark, "s", "main", "t").serialize == "u:1-10:12-14")
+    assert(afterCrash.watermark(spark, "s", "main", "t2").serialize == "u:1-2")
+    afterCrash.upsert(spark, Seq(TableWatermark("s", "main", "t2", "u:3-4")))
+    assert(!java.nio.file.Files.exists(tmp))
+    val healed = new WatermarkStore(path)
+    assert(healed.watermark(spark, "s", "main", "t").serialize == "u:1-10:12-14")
+    assert(healed.watermark(spark, "s", "main", "t2").serialize == "u:1-4")
   }
 
   test("WatermarkGate.containsColumn matches GtidSet.contains") {
