@@ -17,16 +17,6 @@ import org.apache.spark.sql.SparkSession
   *     (no hidden session mutation from a read path).
   */
 object GraftSession {
-  // First-read probes of not-yet-existing control-plane paths (the
-  // watermark store, state sidecars) make DataFrameReader's streaming
-  // -sink check log a WARN with a full FileNotFoundException stack
-  // trace per probe — pure noise that buries real warnings in every
-  // gate build. Expected-miss reads are part of this engine's design,
-  // so that one logger runs at ERROR.
-  org.apache.logging.log4j.core.config.Configurator.setLevel(
-    "org.apache.spark.sql.execution.streaming.FileStreamSink",
-    org.apache.logging.log4j.Level.ERROR)
-
   def builder(cpus: String): SparkSession.Builder =
     SparkSession
       .builder()

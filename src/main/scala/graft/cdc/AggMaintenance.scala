@@ -155,14 +155,14 @@ object AggMaintenance {
     *   1. aggregates the batch's deltas (O(batch), map-side partial);
     *   2. collects the touched bucket ids (≤ nBuckets — control
     *      plane);
-    *   3. reads ONLY the touched buckets of the existing rollup
-    *      (partition-pruned), merges, and dynamic-overwrites those
-    *      buckets.
+    *   3. reads ONLY the touched buckets' files of the existing rollup,
+    *      merges, and commits new files for those buckets through the
+    *      rollup's manifest ([[MetaTables.write]]).
     *
     * Per-batch cost is O(batch + touched-bucket rollup) ON DISK TOO —
     * the property the flat layout loses once the rollup outgrows a
-    * single overwrite. A bucket whose every group zeroes out loses
-    * its directory (same emptied-bucket rule as the state sink).
+    * single overwrite. A bucket whose every group zeroes out keeps no
+    * file (same emptied-bucket rule as the state sink).
     */
   def applyMovingDeltaBucketed(
       spark: SparkSession, rollupDir: String, batchImaged: DataFrame,
@@ -175,11 +175,12 @@ object AggMaintenance {
       .localCheckpoint(true) // reused by the touched-list and the merge
     val touched = d.select("rbucket").distinct().collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) return
-    val merged = MetaTables.readIfExists(spark, rollupDir) match {
+    val hit = touched.toSet
+    val prior = MetaTables.readLog(rollupDir)
+    val merged = prior match {
       case None => d
-      case Some(existing) =>
-        existing
-          .filter(col("rbucket").isin(touched.map(Integer.valueOf): _*))
+      case Some(log) =>
+        MetaTables.read(spark, rollupDir, log, log.files.filter(f => hit(f.bucket)))
           .select(col(keyName), col("n_rows"), col("sum_value"), col("rbucket"))
           .unionByName(d)
           .groupBy(col(keyName), col("rbucket"))
@@ -189,31 +190,18 @@ object AggMaintenance {
       .select(col(keyName), col("n_rows"),
         col("sum_value").cast("decimal(28,4)").as("sum_value"), col("rbucket"))
       .filter(col("n_rows") =!= 0 || col("sum_value") =!= 0)
-      .localCheckpoint(true) // break lineage from the files the overwrite replaces
-    out
-      .repartition(math.min(nBuckets, touched.length), col("rbucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("rbucket")
-      .parquet(rollupDir)
-    // dynamic overwrite leaves a fully-zeroed bucket's old files in
-    // place — drop those directories explicitly
-    val present = out.select("rbucket").distinct().collect().map(_.getInt(0)).toSet
-    touched.filterNot(present).foreach { b =>
-      val dir = java.nio.file.Paths.get(rollupDir, s"rbucket=$b")
-      if (java.nio.file.Files.exists(dir)) {
-        graft.Fs.walkSeq(dir)
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
+    MetaTables.write(rollupDir, prior,
+      out.repartition(math.min(nBuckets, touched.length), col("rbucket")),
+      prior.getOrElse(StateLog.empty(out.schema, "rbucket", nBuckets)), hit)
   }
 
   /** The maintained rollup, typed for output: group key, live row
     * count, decimal-exact sum surfaced as double.
     */
   def read(spark: SparkSession, rollupDir: String, keyName: String = "cohort"): DataFrame =
-    MetaTables.readIfExists(spark, rollupDir) match {
+    MetaTables.readLog(rollupDir) // a bucketed rollup reads the files its manifest names
+      .map(log => MetaTables.read(spark, rollupDir, log, log.files))
+      .orElse(MetaTables.readIfExists(spark, rollupDir)) match {
       case None => spark.emptyDataFrame
       case Some(df) => df.select(
         col(keyName),

@@ -108,11 +108,11 @@ object CdcPipeline {
 
   /** Initial bucket count of a new state table: one. Every write puts
     * one file in each bucket it touches, and a file has a fixed cost
-    * (see [[writeBucketed]]), so a small table pays per bucket, not per
-    * row. The LIVE count is table state, not code
-    * ([[MetaTables.readBucketCount]] sidecar): every state write ends
-    * in [[maybeSplit]] against [[targetBucketBytes]], so the count
-    * tracks state volume instead of being provisioned for it up front.
+    * (see [[writeFiles]]), so a small table pays per bucket, not per
+    * row. The LIVE count is table state, not code (the [[StateLog]]
+    * manifest): every state write ends in [[maybeSplit]] against
+    * [[targetBucketBytes]], so the count tracks state volume instead of
+    * being provisioned for it up front.
     */
   val stateBuckets: Int = 1
 
@@ -132,9 +132,9 @@ object CdcPipeline {
   // paths as hidden and would skip the partition directories
   private[cdc] val bucketCol = "bucket"
 
-  /** The state table's current bucket count (sidecar-backed). */
+  /** The state table's current bucket count (from its manifest). */
   def bucketCount(stateDir: String): Int =
-    MetaTables.readBucketCount(stateDir, stateBuckets)
+    MetaTables.readLog(stateDir).fold(stateBuckets)(_.buckets)
 
   /** Deterministic pk → bucket assignment (Murmur3, same function a
     * shuffle-hash-partitioning of the state would use).
@@ -160,46 +160,31 @@ object CdcPipeline {
       TableWatermark(source, SnapshotJob.schemaName, table, set.serialize)))
   }
 
-  /** A bucket whose every key was just deleted is absent from the
-    * written frame — a dynamic partition overwrite would leave its old
-    * files behind, resurrecting dropped rows. Remove those partition
-    * dirs explicitly (same local-FS seam as the sidecar).
-    */
-  private def removeEmptiedBuckets(
-      stateDir: String, touched: Seq[Int], present: Set[Int]): Unit =
-    touched.filterNot(present).foreach { b =>
-      val dir = java.nio.file.Paths.get(stateDir, s"$bucketCol=$b")
-      if (java.nio.file.Files.exists(dir)) {
-        graft.Fs.walkSeq(dir)
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
-
   /** Apply one micro-batch: GTID-gate, then a bucketed copy-on-write
     * MERGE into the state table, then the watermark upsert. Public so
     * the batch spec can drive it directly.
     *
     * The state parquet is hash-partitioned on `pmod(hash(pk), n)`, `n`
     * the table's bucket count (directory layout `bucket=N/`). A batch
-    * only ever reads-and-rewrites the buckets its keys hash into — partition
-    * pruning limits the read, dynamic partition-overwrite limits the
-    * write — so apply cost is O(batch ∪ touched-bucket state), not
-    * O(state): the Delta/Iceberg copy-on-write MERGE pattern without
-    * the dependency. Untouched buckets' files are never opened: the
-    * pruned read takes its schema from the sidecar (no footer
-    * inference), and the dynamic overwrite replaces only the
-    * partitions present in the written frame.
+    * only ever reads-and-rewrites the buckets its keys hash into: it
+    * reads the touched buckets' files, writes their merged rows as new
+    * files, and commits a manifest ([[StateLog]]) in which those files
+    * replace the touched buckets' old ones (a bucket the merge leaves
+    * empty simply gets none). Apply cost is O(batch ∪ touched-bucket
+    * state), not O(state): the Delta/Iceberg copy-on-write MERGE
+    * pattern without the dependency. Untouched buckets' files are
+    * never opened, and the schema comes from the manifest (no footer
+    * inference).
     *
-    * Schema lives in a tiny sidecar file (the single-table analog of
-    * Delta's transaction-log schema — parquet footers can't speak for
-    * a table whose buckets were written at different times). A batch
-    * arriving with an evolved schema — the downstream meaning of a
-    * gated additive DDL event, which the reference drops in its no-op
-    * `OnDDL` (`internal/cannal/incremental_event.go:31-33`) — triggers
-    * a one-off full-table migration ([[SchemaEvolution.conform]]:
-    * old rows null-fill new columns), amortized O(state) once per DDL;
-    * every schema-stable batch takes the O(batch) COW path.
+    * A batch arriving with an evolved schema — the downstream meaning
+    * of a gated additive DDL event, which the reference drops in its
+    * no-op `OnDDL` (`internal/cannal/incremental_event.go:31-33`) —
+    * triggers a one-off full-table migration
+    * ([[SchemaEvolution.conform]]: old rows null-fill new columns),
+    * amortized O(state) once per DDL; every schema-stable batch takes
+    * the O(batch) COW path. Either way the manifest rename precedes the
+    * watermark upsert, so a crash between them re-applies the batch on
+    * redelivery, which latest-wins makes harmless.
     */
   def applyBatch(
       spark: SparkSession,
@@ -209,47 +194,33 @@ object CdcPipeline {
       batch: DataFrame,
       table: String = "events"
   ): Unit = gatedApply(spark, store, source, batch, table) {
-    val n = bucketCount(stateDir)
+    val log = MetaTables.readLog(stateDir)
+    val n = log.fold(stateBuckets)(_.buckets)
     val bucketed = batch.withColumn(bucketCol, bucketOf(n))
-
-    def write(df: DataFrame, dynamic: Boolean): Unit =
-      writeBucketed(stateDir, df, dynamic, n)
-
-    MetaTables.readStateSchema(spark, stateDir) match {
+    log match {
       case None =>
         // first batch: no state yet
-        write(ChangeFeed.latestState(bucketed), dynamic = false)
+        val out = ChangeFeed.latestState(bucketed)
+        write(stateDir, None, out, StateLog.empty(out.schema, bucketCol, n), _ => true)
 
       case Some(old) =>
-        val target = mergedSchema(old, bucketed.schema)
-        if (target != old) {
+        val target = mergedSchema(old.struct, bucketed.schema)
+        if (target != old.struct) {
           // evolved batch → one-off migration: conform ALL buckets so
           // the table has a single schema again
-          val st = spark.read.schema(old).parquet(stateDir).localCheckpoint(true)
-          write(
-            ChangeFeed.latestState(
-              SchemaEvolution.conform(st, target)
-                .unionByName(SchemaEvolution.conform(bucketed, target))),
-            dynamic = false)
+          val out = ChangeFeed.latestState(
+            SchemaEvolution.conform(MetaTables.read(spark, stateDir, old, old.files), target)
+              .unionByName(SchemaEvolution.conform(bucketed, target)))
+          write(stateDir, log, out, old.withSchema(out.schema), _ => true)
         } else {
           // steady state: O(batch) COW. Touched buckets = one small
           // distinct over the batch (≤ bucket-count values — control
-          // plane); localCheckpoint breaks lineage from the files the
-          // dynamic overwrite replaces, materializing only the touched
-          // fraction of state.
-          val touched = bucketed.select(bucketCol).distinct().collect().map(_.getInt(0))
-          val st = spark.read.schema(old).parquet(stateDir)
-            .filter(col(bucketCol).isin(touched.map(Integer.valueOf): _*))
-          // the eager checkpoint both breaks lineage from the files the
-          // overwrite replaces AND materializes the merged buckets once
-          // (reused by the write and the `present` collect below)
+          // plane)
+          val touched = bucketed.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet
+          val st = MetaTables.read(spark, stateDir, old, old.files.filter(f => touched(f.bucket)))
           val out = ChangeFeed.latestState(
             st.unionByName(SchemaEvolution.conform(bucketed, target)))
-            .localCheckpoint(true)
-          write(out, dynamic = true)
-          val present =
-            out.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet
-          removeEmptiedBuckets(stateDir, touched.toSeq, present)
+          write(stateDir, log, out, old, touched)
         }
     }
     maybeSplit(spark, stateDir)
@@ -270,7 +241,7 @@ object CdcPipeline {
     * also folds it, so the two apply flavors compose freely.
     *
     * An evolved batch schema falls back to the COW path's one-off
-    * migration (delta files narrower than the sidecar schema are
+    * migration (delta files narrower than the manifest's schema are
     * fine — missing columns read as null — but a WIDER batch must
     * migrate the table).
     */
@@ -281,15 +252,14 @@ object CdcPipeline {
       source: String,
       batch: DataFrame,
       table: String = "events"
-  ): Unit = MetaTables.readStateSchema(spark, stateDir) match {
+  ): Unit = MetaTables.readLog(stateDir) match {
     case None => applyBatch(spark, store, stateDir, source, batch, table)
-    case Some(old) =>
-      val n = bucketCount(stateDir)
-      val bucketed = batch.withColumn(bucketCol, bucketOf(n))
-      if (mergedSchema(old, bucketed.schema) != old)
+    case Some(log) =>
+      val bucketed = batch.withColumn(bucketCol, bucketOf(log.buckets))
+      if (mergedSchema(log.struct, bucketed.schema) != log.struct)
         applyBatch(spark, store, stateDir, source, batch, table)
       else gatedApply(spark, store, source, batch, table) {
-        appendBucketed(stateDir, SchemaEvolution.conform(bucketed, old), n)
+        write(stateDir, Some(log), SchemaEvolution.conform(bucketed, log.struct), log, _ => false)
         maybeSplit(spark, stateDir)
       }
   }
@@ -362,11 +332,11 @@ object CdcPipeline {
     *     removal is an explicit later cleanup, never implicit;
     *   - **rename column** = add-new + tombstone-old: the new name
     *     carries the values, the old column retains-and-nulls;
-    *   - **truncate** = state reset: every bucket directory is
-    *     removed, the sidecar (schema + bucket count) survives, and
-    *     the WATERMARK is deliberately untouched — positions already
-    *     covered stay covered, so a redelivered pre-truncate batch
-    *     gates to a no-op instead of resurrecting truncated rows.
+    *   - **truncate** = state reset: the manifest keeps its schema and
+    *     bucket count and names no files, and the WATERMARK is
+    *     deliberately untouched — positions already covered stay
+    *     covered, so a redelivered pre-truncate batch gates to a no-op
+    *     instead of resurrecting truncated rows.
     *
     * All three are idempotent under redelivery of the same statement
     * (re-null, rename-to-existing no-ops, re-truncate of empty).
@@ -397,39 +367,40 @@ object CdcPipeline {
   }
 
   def applyDdl(spark: SparkSession, stateDir: String, op: DdlOp): Unit =
-    MetaTables.readStateSchema(spark, stateDir) match {
+    MetaTables.readLog(stateDir) match {
       case None => () // DDL ahead of any state: nothing to migrate
-      case Some(old) => op match {
-        case DdlOp.Truncate =>
-          val buckets = bucketFileStats(stateDir).map(_._1)
-          removeEmptiedBuckets(stateDir, buckets, present = Set.empty)
-        case DdlOp.DropColumn(c) =>
-          old.fields.find(_.name == c).foreach { f =>
-            val st = spark.read.schema(old).parquet(stateDir).localCheckpoint(true)
-            writeBucketed(stateDir,
-              st.withColumn(c, lit(null).cast(f.dataType)), dynamic = false,
-              bucketCount(stateDir))
-          }
-        case DdlOp.RenameColumn(from, to) =>
-          if (old.fieldNames.contains(from) && !old.fieldNames.contains(to)) {
-            val f = old(from)
-            val st = spark.read.schema(old).parquet(stateDir).localCheckpoint(true)
-            writeBucketed(stateDir,
-              st.withColumn(to, col(from))
-                .withColumn(from, lit(null).cast(f.dataType)),
-              dynamic = false, bucketCount(stateDir))
-          }
-      }
+      case Some(old) =>
+        def rewrite(df: DataFrame): Unit =
+          write(stateDir, Some(old), df, old.withSchema(df.schema), _ => true)
+        val schema = old.struct
+        op match {
+          case DdlOp.Truncate =>
+            MetaTables.commit(stateDir, Some(old), old.copy(files = Seq.empty))
+          case DdlOp.DropColumn(c) =>
+            schema.fields.find(_.name == c).foreach { f =>
+              rewrite(MetaTables.read(spark, stateDir, old, old.files)
+                .withColumn(c, lit(null).cast(f.dataType)))
+            }
+          case DdlOp.RenameColumn(from, to) =>
+            if (schema.fieldNames.contains(from) && !schema.fieldNames.contains(to))
+              rewrite(MetaTables.read(spark, stateDir, old, old.files)
+                .withColumn(to, col(from))
+                .withColumn(from, lit(null).cast(schema(from).dataType)))
+        }
     }
+
+  /** The manifest of an existing state table. */
+  private def logOf(stateDir: String): StateLog =
+    MetaTables.readLog(stateDir).getOrElse(
+      throw new IllegalStateException(s"no state table at $stateDir"))
 
   /** Current state under merge-on-read: one latest-wins pass over
     * base + delta files. On a fully compacted table this is a no-op
     * window over already-unique keys.
     */
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val schema = MetaTables.readStateSchema(spark, stateDir).getOrElse(
-      throw new IllegalStateException(s"no state table at $stateDir"))
-    ChangeFeed.latestState(spark.read.schema(schema).parquet(stateDir))
+    val log = logOf(stateDir)
+    ChangeFeed.latestState(MetaTables.read(spark, stateDir, log, log.files))
   }
 
   /** Time-travel read: the state AS OF transaction `pos` — the
@@ -452,55 +423,45 @@ object CdcPipeline {
     * retains versions by design.
     */
   def readStateAsOf(spark: SparkSession, stateDir: String, asOf: Long): DataFrame = {
-    val schema = MetaTables.readStateSchema(spark, stateDir).getOrElse(
-      throw new IllegalStateException(s"no state table at $stateDir"))
+    val log = logOf(stateDir)
     ChangeFeed.latestState(
-      spark.read.schema(schema).parquet(stateDir).filter(col("pos") <= asOf))
+      MetaTables.read(spark, stateDir, log, log.files).filter(col("pos") <= asOf))
   }
 
   /** Fold every bucket whose file count exceeds `maxFilesPerBucket`
     * back to a single latest-wins base file. Only the over-threshold
-    * buckets are read and rewritten (partition-pruned read, dynamic
-    * partition overwrite) — untouched buckets' files are never
-    * opened. Tombstones drop out here, exactly as they do on the COW
-    * path; a bucket left empty (every key deleted) loses its
-    * directory. Returns the compacted bucket ids.
+    * buckets are read and rewritten — untouched buckets' files are
+    * never opened. Tombstones drop out here, exactly as they do on the
+    * COW path; a bucket left empty (every key deleted) keeps no file.
+    * Returns the compacted bucket ids.
     */
   def compact(
       spark: SparkSession,
       stateDir: String,
       maxFilesPerBucket: Int = 4
   ): Seq[Int] = {
-    // Target selection is the FS listing ALONE — file counts are what
-    // compaction is triggered by, and they come from ≤ bucket-count
-    // directory listings, never from scanning state data. A no-op
-    // compaction check therefore runs ZERO Spark jobs (spec-asserted);
-    // at 100 TB the control plane stays O(buckets), not O(state).
+    // Target selection is the manifest ALONE — file counts are what
+    // compaction is triggered by, and the manifest lists them, never a
+    // scan of state data. A no-op compaction check therefore runs ZERO
+    // Spark jobs (spec-asserted); at 100 TB the control plane stays
+    // O(buckets), not O(state).
     val targets = bucketFileStats(stateDir)
       .filter(_._2 > maxFilesPerBucket).map(_._1)
     if (targets.isEmpty) Seq.empty
     else {
-      val schema = MetaTables.readStateSchema(spark, stateDir).getOrElse(
-        throw new IllegalStateException(s"no state table at $stateDir"))
+      val old = logOf(stateDir)
+      val hot = targets.toSet
       val merged = ChangeFeed.latestState(
-        spark.read.schema(schema).parquet(stateDir)
-          .filter(col(bucketCol).isin(targets.map(Integer.valueOf): _*)))
-        .localCheckpoint(true)
-      writeBucketed(stateDir, merged, dynamic = true, bucketCount(stateDir))
-      val present =
-        merged.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet
-      removeEmptiedBuckets(stateDir, targets, present)
+        MetaTables.read(spark, stateDir, old, old.files.filter(f => hot(f.bucket))))
+      write(stateDir, Some(old), merged, old, hot)
       maybeSplit(spark, stateDir)
       targets
     }
   }
 
-  /** Write a state frame in the bucketed layout: one file per bucket
-    * (hash repartition on the partition column to `buckets` tasks),
-    * then the schema and bucket-count sidecars, so the count on disk is
-    * always the one the data was written with. Dynamic mode overwrites
-    * only the partitions present in `df`; static mode replaces the
-    * whole table.
+  /** Write `df` in the bucketed layout, one file per bucket it touches
+    * (hash repartition on the bucket column to `next.buckets` tasks),
+    * and commit it ([[MetaTables.write]]).
     *
     * A file is the unit cost of a write: on a local FS each one costs
     * ~15–20 ms of task time whatever its size, because Hadoop's local
@@ -510,66 +471,17 @@ object CdcPipeline {
     * dir 0.2 s). That is why the bucket count follows bytes
     * ([[maybeSplit]]).
     */
-  private def writeBucketed(
-      stateDir: String, df: DataFrame, dynamic: Boolean, buckets: Int): Unit = {
-    val w = df
-      .repartition(buckets, col(bucketCol))
-      .write
-      .mode("overwrite")
-      .partitionBy(bucketCol)
-    // a static overwrite deletes the whole directory, MetaTables'
-    // `_graft_*` sidecars included: the schema and bucket count are
-    // rewritten below, the rest (chunk bounds) carried across, also
-    // when the write fails
-    val base = java.nio.file.Paths.get(stateDir)
-    val sidecars =
-      if (dynamic || !java.nio.file.Files.exists(base)) Seq.empty
-      else graft.Fs.listDir(base)
-        .filter(_.getFileName.toString.startsWith("_graft_"))
-        .map(p => p -> java.nio.file.Files.readAllBytes(p))
-    try {
-      (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
-        .parquet(stateDir)
-      MetaTables.writeStateSchema(stateDir, df.schema)
-      MetaTables.writeBucketCount(stateDir, buckets)
-    } finally sidecars.foreach { case (p, bytes) =>
-      if (!java.nio.file.Files.exists(p)) java.nio.file.Files.write(p, bytes)
-    }
-  }
+  private def write(stateDir: String, prev: Option[StateLog], df: DataFrame,
+      next: StateLog, replaced: Int => Boolean): Unit =
+    MetaTables.write(stateDir, prev, df.repartition(next.buckets, col(bucketCol)), next, replaced)
 
-  /** Append a state frame (MOR deltas, snapshot chunks) in the bucketed
-    * layout: one new file per touched bucket.
-    */
-  private def appendBucketed(stateDir: String, df: DataFrame, buckets: Int): Unit =
-    df.repartition(buckets, col(bucketCol))
-      .write.mode("append").partitionBy(bucketCol).parquet(stateDir)
-
-  /** Bootstrap the state table from a full snapshot — the reference's
+  /** CRASH-RESUMABLE snapshot bootstrap by chunk — the reference's
     * snapshot-then-stream protocol (`docs/全量抓取逻辑.md:12-52`): the
-    * snapshot's materialized rows land in the bucketed layout and the
-    * watermark is set to the PINNED snapshot position (`pos`), not to
-    * a data-derived set — the snapshot is consistent as-of `pos` even
-    * for keys it never saw, so incremental batches at or below `pos`
-    * must gate to a no-op. After this, [[applyBatch]] keeps the table
-    * fresh.
-    */
-  def bootstrapSnapshot(
-      spark: SparkSession,
-      store: WatermarkStore,
-      stateDir: String,
-      source: String,
-      snapshotFeed: DataFrame,
-      pos: String
-  ): Unit = {
-    val n = bucketCount(stateDir)
-    val bucketed = snapshotFeed.withColumn(bucketCol, bucketOf(n))
-    writeBucketed(stateDir, ChangeFeed.latestState(bucketed), dynamic = false, n)
-    maybeSplit(spark, stateDir)
-    store.upsert(spark, Seq(
-      TableWatermark(source, SnapshotJob.schemaName, "events", pos)))
-  }
-
-  /** [[bootstrapSnapshot]] made CRASH-RESUMABLE by chunk: at 100 TB a
+    * snapshot's rows land in the bucketed layout and the watermark is
+    * set to the PINNED snapshot position (`pos`), not to a data-derived
+    * set — the snapshot is consistent as-of `pos` even for keys it never
+    * saw, so incremental batches at or below `pos` must gate to a no-op.
+    * After this, [[applyBatch]] keeps the table fresh. At 100 TB a
     * snapshot runs for days, and the reference's one-shot design
     * (`fullamount_service.go:72-110` — all tables in one pass, meta
     * saved only at the end) restarts from zero on any failure. Here
@@ -613,6 +525,14 @@ object CdcPipeline {
     require(numChunks > 0, "numChunks must be positive")
     val chunksTable = s"$table#chunks"
     val schemaName = SnapshotJob.schemaName
+    val prev = MetaTables.readLog(stateDir)
+    // a fresh table's manifest: written before the first chunk (with
+    // the pinned bounds), or alone for an empty snapshot — a completed
+    // empty snapshot is a READABLE empty state table, not a "no state
+    // table" error
+    val log = prev.getOrElse(StateLog.empty(
+      snapshotFeed.withColumn(bucketCol, bucketOf(stateBuckets)).schema, bucketCol, stateBuckets))
+    val pinned = log.chunks.find(_.table == table)
     val mm = snapshotFeed.agg(min(col(chunkBy)), max(col(chunkBy))).head()
     if (mm.isNullAt(0)) { // empty table: a complete (empty) snapshot
       // …unless a prior non-empty run already pinned chunk bounds: a
@@ -621,17 +541,13 @@ object CdcPipeline {
       // empty-complete path would otherwise mark every chunk covered
       // and pin the table watermark — silently losing the rows the
       // unfinished chunks never wrote
-      MetaTables.readChunkBounds(stateDir, table).foreach { case (plo, phi, pn) =>
+      pinned.foreach { c =>
         throw new IllegalStateException(
           s"resumableSnapshot chunk bounds drifted on resume: pinned " +
-            s"[$plo,$phi]/$pn chunks vs an EMPTY recomputed feed — " +
+            s"[${c.lo},${c.hi}]/${c.numChunks} chunks vs an EMPTY recomputed feed — " +
             "snapshotFeed must be a pinned (immutable) read")
       }
-      // the sidecar must still exist — a completed empty snapshot is a
-      // READABLE empty state table, not a "no state table" error
-      if (!MetaTables.hasStateSchema(stateDir))
-        MetaTables.writeStateSchema(stateDir,
-          snapshotFeed.withColumn(bucketCol, bucketOf(bucketCount(stateDir))).schema)
+      if (prev.isEmpty) MetaTables.commit(stateDir, None, log)
       store.upsert(spark, Seq(
         TableWatermark(source, schemaName, chunksTable,
           GtidSet.empty.addRange("chunks", GtidRange(0, numChunks - 1)).serialize),
@@ -646,14 +562,16 @@ object CdcPipeline {
     // silently missing or duplicating rows. Persisting (lo, hi,
     // numChunks) makes the contract checkable: a drifted resume fails
     // loudly instead.
-    MetaTables.readChunkBounds(stateDir, table) match {
-      case Some((plo, phi, pn)) =>
-        if (plo != lo || phi != hi || pn != numChunks)
+    pinned match {
+      case Some(c) =>
+        if (c.lo != lo || c.hi != hi || c.numChunks != numChunks)
           throw new IllegalStateException(
             s"resumableSnapshot chunk bounds drifted on resume: pinned " +
-              s"[$plo,$phi]/$pn chunks vs recomputed [$lo,$hi]/$numChunks — " +
+              s"[${c.lo},${c.hi}]/${c.numChunks} chunks vs recomputed [$lo,$hi]/$numChunks — " +
               "snapshotFeed must be a pinned (immutable) read")
-      case None => MetaTables.writeChunkBounds(stateDir, table, lo, hi, numChunks)
+      case None =>
+        MetaTables.commit(stateDir, prev,
+          log.copy(chunks = log.chunks :+ ChunkBounds(table, lo, hi, numChunks)))
     }
     val width = math.max(1L, (hi - lo) / numChunks + 1)
     val done = store.watermark(spark, source, schemaName, chunksTable)
@@ -663,11 +581,9 @@ object CdcPipeline {
     pending.foreach { k =>
       val (cLo, cHi) = (lo + k * width, lo + (k + 1) * width - 1)
       val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
-      val n = bucketCount(stateDir)
-      val bucketed = chunk.withColumn(bucketCol, bucketOf(n))
-      if (!MetaTables.hasStateSchema(stateDir))
-        MetaTables.writeStateSchema(stateDir, bucketed.schema)
-      appendBucketed(stateDir, bucketed, n)
+      val cur = logOf(stateDir)
+      write(stateDir, Some(cur),
+        chunk.withColumn(bucketCol, bucketOf(cur.buckets)), cur, _ => false)
       maybeSplit(spark, stateDir)
       written += 1
       if (written > failAfterChunks)
@@ -695,30 +611,22 @@ object CdcPipeline {
         next.fields.filterNot(f => old.fieldNames.contains(f.name)))
   }
 
-  /** Per-bucket (id, file count, bytes) from ≤ bucket-count directory
-    * listings — the control-plane source of truth for compaction and
-    * split decisions. Pure driver-side FS metadata: no Spark job, no
-    * state data touched (same local-FS seam as the sidecars).
+  /** Per-bucket (id, file count, bytes) of the live files — the
+    * control-plane source of truth for compaction and split decisions.
+    * Read from the manifest: no Spark job, no FS listing, no state data
+    * touched. A bucket without files is absent.
     */
-  private[cdc] def bucketFileStats(stateDir: String): Seq[(Int, Int, Long)] = {
-    val base = java.nio.file.Paths.get(stateDir)
-    if (!java.nio.file.Files.exists(base)) Seq.empty
-    else graft.Fs.listDir(base)
-      .filter(p => p.getFileName.toString.startsWith(s"$bucketCol="))
-      .map { p =>
-        val b = p.getFileName.toString.stripPrefix(s"$bucketCol=").toInt
-        val files = graft.Fs.listDir(p)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        (b, files.size, files.map(java.nio.file.Files.size).sum)
-      }
+  private[cdc] def bucketFileStats(stateDir: String): Seq[(Int, Int, Long)] =
+    MetaTables.readLog(stateDir).fold(Seq.empty[StateFile])(_.files)
+      .groupBy(_.bucket).toSeq
+      .map { case (b, fs) => (b, fs.size, fs.map(_.bytes).sum) }
       .sortBy(_._1)
-  }
 
   /** Per-bucket health of the state table: file count, bytes, and —
     * opt-in — rows. The small-file / skew observability surface of
-    * the COW sink. File counts/bytes come from the driver-side FS
-    * listing ([[bucketFileStats]]); `withRows = true` additionally
-    * runs a per-bucket row count over the state parquet — an O(state)
+    * the COW sink. File counts/bytes come from the manifest
+    * ([[bucketFileStats]]); `withRows = true` additionally runs a
+    * per-bucket row count over the state parquet — an O(state)
     * metadata job that exists for DIAGNOSTICS only. Nothing in the
     * pipeline's control plane ([[compact]], [[maybeSplit]]) consumes
     * it: at 100 TB a compaction check must not pay a table scan.
@@ -730,9 +638,9 @@ object CdcPipeline {
     val fs = bucketFileStats(stateDir).toDF(bucketCol, "n_files", "bytes")
     if (!withRows) fs.orderBy(bucketCol)
     else {
-      val rows = MetaTables.readStateSchema(spark, stateDir) match {
-        case Some(sc) =>
-          spark.read.schema(sc).parquet(stateDir)
+      val rows = MetaTables.readLog(stateDir) match {
+        case Some(log) =>
+          MetaTables.read(spark, stateDir, log, log.files)
             .groupBy(col(bucketCol)).agg(count(lit(1)).as("n_rows"))
         case None => Seq.empty[(Int, Long)].toDF(bucketCol, "n_rows")
       }
@@ -754,25 +662,19 @@ object CdcPipeline {
     * large the factor — amortized like any LSM/extendible-hashing
     * reorganization; applyBatch stays O(batch) throughout.
     *
-    * Since every state write ends in [[maybeSplit]], a split runs on
-    * the apply path, with the same crash window as the additive
-    * schema migration: a static overwrite from a local checkpoint, so
-    * a driver crash between the directory delete and the sidecar
-    * writes that follow the data loses or mis-buckets the state.
-    * Closing that window
-    * (write-then-swap, or a table format with atomic commits) is out
-    * of scope here.
+    * The new layout is written beside the live one and swapped in by
+    * the manifest rename, like every state write: a crash before the
+    * rename leaves the old layout and bucket count in force, and the
+    * next write sweeps the new files.
     */
   def splitBuckets(spark: SparkSession, stateDir: String, factor: Int = 2): Int = {
     require(factor >= 2, s"split factor must be at least 2, got $factor")
-    val next = bucketCount(stateDir) * factor
-    val schema = MetaTables.readStateSchema(spark, stateDir).getOrElse(
-      throw new IllegalStateException(s"no state table at $stateDir"))
-    val st = spark.read.schema(schema).parquet(stateDir)
+    val log = logOf(stateDir)
+    val next = log.buckets * factor
+    val st = MetaTables.read(spark, stateDir, log, log.files)
       .drop(bucketCol)
       .withColumn(bucketCol, bucketOf(next))
-      .localCheckpoint(true)
-    writeBucketed(stateDir, st, dynamic = false, next)
+    write(stateDir, Some(log), st, log.withSchema(st.schema).copy(buckets = next), _ => true)
     next
   }
 
@@ -780,9 +682,9 @@ object CdcPipeline {
     * to the power of two that brings it back under target (but no finer
     * than the table's total bytes need), in one rewrite. The pipeline
     * calls this after every state write with the [[targetBucketBytes]]
-    * default; the no-split answer is the driver-side listing alone
-    * (zero Spark jobs). Returns the new bucket count, or None if no
-    * split was needed.
+    * default; the no-split answer is the manifest alone (zero Spark
+    * jobs). Returns the new bucket count, or None if no split was
+    * needed.
     */
   def maybeSplit(
       spark: SparkSession,

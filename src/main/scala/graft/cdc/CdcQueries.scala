@@ -1428,8 +1428,8 @@ object CdcQueries {
     * hash-checked query, with the incremental half arriving as REAL
     * binlog bytes:
     *
-    *   1. [[CdcPipeline.bootstrapSnapshot]] materializes the
-    *      first-half feed into the bucketed state table and pins the
+    *   1. a one-chunk [[CdcPipeline.resumableSnapshot]] lands the
+    *      first-half feed in the bucketed state table and pins the
     *      watermark to the snapshot position `lo-mid` (the
     *      `REPEATABLE READ` + `gtid_executed` consistency point);
     *   2. the post-snapshot feed rides the binlog: encoded to
@@ -1451,8 +1451,9 @@ object CdcQueries {
       val mm = feed.agg(min(col("pos")), max(col("pos"))).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val mid = lo + (hi - lo) / 2
-      CdcPipeline.bootstrapSnapshot(s, store, dir, "harness-src",
-        feed.filter(col("pos") <= mid), s"harness-src:$lo-$mid")
+      CdcPipeline.resumableSnapshot(s, store, dir, "harness-src",
+        feed.filter(col("pos") <= mid), chunkBy = "pk", numChunks = 1,
+        pos = s"harness-src:$lo-$mid")
       val incremental = binlogRoundtrip(s, feed.filter(col("pos") > mid))
         .localCheckpoint(true) // decode once; apply + redelivery slice from it
       CdcPipeline.applyBatch(s, store, dir, "harness-src", incremental)
@@ -1518,8 +1519,9 @@ object CdcQueries {
       val mm = feed.agg(min(col("pos")), max(col("pos"))).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val mid = lo + (hi - lo) / 2
-      CdcPipeline.bootstrapSnapshot(s, store, dir, "harness-src",
-        feed.filter(col("pos") <= mid), s"harness-src:$lo-$mid")
+      CdcPipeline.resumableSnapshot(s, store, dir, "harness-src",
+        feed.filter(col("pos") <= mid), chunkBy = "pk", numChunks = 1,
+        pos = s"harness-src:$lo-$mid")
       val uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
       val rows = feed.filter(col("pos") > mid)
         .select(col("pos"), col("ts"), col("pk"), col("op"), col("value"))
@@ -1590,8 +1592,9 @@ object CdcQueries {
         ("src-b", "bbbbbbbb-0000-4000-8000-00000000000b", col("pk") % 2 =!= 0))
       val incs = sources.map { case (name, uuid, pred) =>
         val f = feed.filter(pred)
-        CdcPipeline.bootstrapSnapshot(s, store, s"$base/state/$name", name,
-          f.filter(col("pos") <= mid), s"$name:$lo-$mid")
+        CdcPipeline.resumableSnapshot(s, store, s"$base/state/$name", name,
+          f.filter(col("pos") <= mid), chunkBy = "pk", numChunks = 1,
+          pos = s"$name:$lo-$mid")
         (name,
           binlogRoundtrip(s, f.filter(col("pos") > mid), uuid).localCheckpoint(true))
       }

@@ -21,10 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory layout) maintained copy-on-write, the same discipline as
   * [[CdcPipeline.applyBatch]]'s pk-hash buckets but keyed on the view's
   * own group key, because that key is what both halves of the op prune
-  * on: the state read for a batch filters to the touched cohorts
-  * (partition pruning — untouched directories are never opened) and
-  * the state write is a dynamic partition overwrite that replaces
-  * ONLY the touched directories. Per-batch cost is
+  * on: the state read for a batch reads only the touched cohorts' files
+  * (untouched directories are never opened) and the state write commits
+  * new files for ONLY the touched cohorts through the table's manifest
+  * ([[MetaTables.write]]; a cohort the merge empties keeps no file).
+  * Per-batch cost is
   * O(batch + touched-cohorts' state), never O(state), and the merged
   * touched-cohort frame is materialized ONCE (localCheckpoint) and
   * reused by the state write AND the rank refresh — the refresh never
@@ -41,22 +42,6 @@ object TopkMaintenance {
   /** Group key: the [[AggMaintenance]] cohort (`pk % 10`). */
   private def cohortOf(pk: org.apache.spark.sql.Column) = pmod(pk, lit(10))
 
-  /** A cohort whose every key was just deleted is absent from the
-    * written frame — a dynamic partition overwrite would leave its old
-    * directory behind, resurrecting dropped rows (the
-    * [[CdcPipeline]] emptied-bucket hazard, same fix).
-    */
-  private def removeEmptiedCohorts(
-      stateDir: String, touched: Seq[Int], present: Set[Int]): Unit =
-    touched.filterNot(present).foreach { c =>
-      val dir = java.nio.file.Paths.get(stateDir, s"cohort=$c")
-      if (java.nio.file.Files.exists(dir)) {
-        graft.Fs.walkSeq(dir)
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
-
   /** Apply one ordered feed slice `(pos, pk, op, value)`: fold it
     * latest-wins, merge into the touched cohorts' state partitions,
     * then re-rank ONLY those cohorts of the top-k view.
@@ -65,7 +50,7 @@ object TopkMaintenance {
     * transaction — a crash between them leaves the view stale for the
     * batch's cohorts. Recovery is the pipeline's standard at-least-once
     * rule: RE-APPLY the batch. Both halves are idempotent under
-    * re-delivery (the state merge replaces the same cohort partitions;
+    * re-delivery (the state merge replaces the same cohorts' files;
     * the re-rank recomputes from post-merge state), so the pair
     * converges — same posture as the [[AggMaintenance]] rollups and
     * the gated state sink.
@@ -84,31 +69,26 @@ object TopkMaintenance {
     // the group key is low-cardinality by the op's own contract)
     val touched = last.select("cohort").distinct().collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) return
-    val prior = MetaTables.readIfExists(spark, stateDir)
+    val hit = touched.toSet
+    val prior = MetaTables.readLog(stateDir)
     // merged post-batch state OF THE TOUCHED COHORTS ONLY: the prior
-    // read filters on the partition column, so untouched directories
-    // are pruned out of the scan entirely
+    // read takes only their files, so untouched directories are never
+    // opened
     val mergedTouched = (prior match {
       case None =>
         last.filter(col("op") =!= "delete")
           .select("cohort", "pk", "pos", "value")
-      case Some(st) =>
-        st.filter(col("cohort").isin(touched.map(Integer.valueOf): _*))
+      case Some(log) =>
+        MetaTables.read(spark, stateDir, log, log.files.filter(f => hit(f.bucket)))
           .select("cohort", "pk", "pos", "value")
           .join(last.select("pk"), Seq("pk"), "left_anti")
           .unionByName(last.filter(col("op") =!= "delete")
             .select("cohort", "pk", "pos", "value"))
-    }).localCheckpoint(true) // one materialization: breaks lineage from the
-    // files the overwrite replaces; reused by the write, the emptied-cohort
-    // check, and the rank refresh below
-    val w = mergedTouched
-      .repartition(col("cohort")) // ~one file per cohort directory
-      .write.mode("overwrite").partitionBy("cohort")
-    (if (prior.isDefined) w.option("partitionOverwriteMode", "dynamic") else w)
-      .parquet(stateDir)
-    val present =
-      mergedTouched.select("cohort").distinct().collect().map(_.getInt(0)).toSet
-    removeEmptiedCohorts(stateDir, touched, present)
+    }).localCheckpoint(true) // one materialization, reused by the state
+    // write and the rank refresh below
+    MetaTables.write(stateDir, prior,
+      mergedTouched.repartition(col("cohort")), // ~one file per cohort directory
+      prior.getOrElse(StateLog.empty(mergedTouched.schema, "cohort", 10)), hit)
     // re-rank the touched cohorts straight from the merged frame — it IS
     // those cohorts' post-merge state, no re-read of what we just wrote
     val wTop = org.apache.spark.sql.expressions.Window

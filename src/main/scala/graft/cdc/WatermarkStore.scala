@@ -1,45 +1,154 @@
 package graft.cdc
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Row, SparkSession}
 
 import graft.model.GtidSet
 
-/** Read-a-table-that-may-not-exist-yet, shared by the incremental
-  * rollup and top-k state tables ([[AggMaintenance]],
-  * [[TopkMaintenance]]). `None` covers exactly the two
-  * recoverable "no data yet" shapes: the path is absent
-  * (PATH_NOT_FOUND — first ever run) or present but file-less
-  * (UNABLE_TO_INFER_SCHEMA — an overwrite was torn mid-write, leaving
-  * only temporaries; both consumers are idempotent-replay safe, so
-  * treating a torn table as empty self-heals on the next write
-  * instead of crash-looping). Every other failure propagates.
+/** Driver-side control-plane files of the cdc tables. java.nio is fine
+  * here — the harness is local-FS; a cluster deployment swaps in the
+  * Hadoop FileSystem API at this one seam.
   */
 private[cdc] object MetaTables {
+  private[cdc] val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Crash-injection seam for specs: called with a directory and each
+    * commit step taken there — "written" (a write's new data files are
+    * on disk), "staged" (a replacement file sits beside the one it will
+    * replace), "committed" (a state manifest was renamed into place). A
+    * spec throws from it to stop a commit at that step.
+    */
+  @volatile private[cdc] var onStep: (String, String) => Unit = (_, _) => ()
+
+  /** Read-a-table-that-may-not-exist-yet, shared by the incremental
+    * rollup and top-k state tables ([[AggMaintenance]],
+    * [[TopkMaintenance]]). `None` covers exactly the two recoverable
+    * "no data yet" shapes: the path is absent (first ever run; tested
+    * on the driver, so Spark never probes a missing path) or present
+    * but file-less (UNABLE_TO_INFER_SCHEMA — an overwrite was torn
+    * mid-write, leaving only temporaries; both consumers are
+    * idempotent-replay safe, so treating a torn table as empty
+    * self-heals on the next write instead of crash-looping). Every
+    * other failure propagates.
+    */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" ||
-            e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        None
-    }
+    if (!Files.exists(Paths.get(path))) None
+    else
+      try Some(spark.read.parquet(path))
+      catch {
+        case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+      }
 
-  // ---- state-table schema sidecar ----------------------------------------
-  // The single-table analog of Delta's transaction-log schema: a
-  // bucketed COW table's parquet footers can disagree mid-evolution,
-  // so the authoritative schema lives beside the data. `_`-prefixed:
-  // Spark's file listing treats it as hidden, so the parquet reader
-  // never sees it. java.nio is fine here — the harness is local-FS;
-  // a cluster deployment swaps in the Hadoop FileSystem API at this
-  // one seam.
+  /** Name of the temp file [[replaceAtomically]] stages `name` in. */
+  def tmpName(name: String): String = s".$name.tmp"
 
-  private def sidecar(dir: String) = java.nio.file.Paths.get(dir, "_graft_schema.json")
+  /** Replace `file` with `bytes` in one step: write a temp file beside
+    * it, then rename it over the file (`ATOMIC_MOVE`). A reader sees the
+    * old content or the new, never a torn or missing file; a crash
+    * before the rename leaves only the temp file, which no reader opens
+    * and the next replace overwrites. The rename is atomic on a local FS
+    * and on HDFS, not on an object store. The temp file is not fsynced:
+    * atomic against a process crash, not a power loss.
+    */
+  def replaceAtomically(file: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(file.getParent)
+    val tmp = file.resolveSibling(tmpName(file.getFileName.toString))
+    Files.write(tmp, bytes)
+    onStep(file.getParent.toString, "staged")
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  // ---- state-table manifest ----------------------------------------------
+  // `_`-prefixed: Spark's file listing treats it (and its `.`-prefixed
+  // temp file) as hidden, so a directory read never sees it.
+
+  private val LogName = "_graft_log.json"
+
+  def readLog(dir: String): Option[StateLog] = {
+    val p = Paths.get(dir, LogName)
+    if (Files.exists(p)) Some(json.readValue(p.toFile, classOf[StateLog])) else None
+  }
+
+  def writeLog(dir: String, log: StateLog): Unit =
+    replaceAtomically(Paths.get(dir, LogName), json.writeValueAsBytes(log))
+
+  /** The rows of `files` under the manifest's schema. The manifest, not
+    * a directory listing, decides what a read sees, so files a crashed
+    * write left behind are never read; `basePath` recovers the partition
+    * column from the `<column>=N/` paths.
+    */
+  def read(spark: SparkSession, dir: String, log: StateLog, files: Seq[StateFile]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), log.struct)
+    else
+      spark.read.schema(log.struct).option("basePath", dir)
+        .parquet(files.map(f => s"$dir/${f.path}"): _*)
+
+  /** Append `df`, already partitioned the way its files should fall,
+    * into the table's partition directories as new files, then
+    * [[commit]]: the new files replace, in `next`, the files of the
+    * partitions `replaced` selects (none for an append). `prev` is the
+    * manifest the write started from. Writers only ever add files; the
+    * manifest rename is the one step that changes what the table holds.
+    *
+    * The new files are every data file `prev` does not name. So that
+    * they can only be this write's own output, the files a crashed,
+    * uncommitted attempt left behind are swept first.
+    */
+  def write(dir: String, prev: Option[StateLog], df: DataFrame, next: StateLog,
+      replaced: Int => Boolean): Unit = {
+    val live = prev.fold(Set.empty[String])(_.files.map(_.path).toSet)
+    graft.Fs.deleteRecursively(Paths.get(dir, "_temporary"))
+    remove(dir, onDisk(dir, next.partitionBy).filterNot(f => live(f.path)))
+    df.write.mode("append").partitionBy(next.partitionBy).parquet(dir)
+    onStep(Paths.get(dir).toString, "written")
+    val added = onDisk(dir, next.partitionBy).filterNot(f => live(f.path))
+    commit(dir, prev, next.copy(files = next.files.filterNot(f => replaced(f.bucket)) ++ added))
+  }
+
+  /** Publish `next` as the table's manifest — the commit point: a
+    * rename, atomic on a local FS and on HDFS (an object store would
+    * need a put-if-absent log instead) — then delete the files of
+    * `prev` it no longer names. A crash before the rename leaves the
+    * old table intact; one after it leaves only unnamed files, which
+    * the next write sweeps.
+    */
+  def commit(dir: String, prev: Option[StateLog], next: StateLog): Unit = {
+    writeLog(dir, next.copy(files = next.files.sortBy(f => (f.bucket, f.path))))
+    onStep(Paths.get(dir).toString, "committed")
+    val keep = next.files.map(_.path).toSet
+    remove(dir, prev.fold(Seq.empty[StateFile])(_.files).filterNot(f => keep(f.path)))
+  }
+
+  /** Every data file in the table's partition directories, named or not. */
+  private def onDisk(dir: String, partitionBy: String): Seq[StateFile] = {
+    val base = Paths.get(dir)
+    if (!Files.exists(base)) Seq.empty
+    else graft.Fs.listDir(base)
+      .filter(_.getFileName.toString.startsWith(s"$partitionBy="))
+      .flatMap { d =>
+        val b = d.getFileName.toString.stripPrefix(s"$partitionBy=").toInt
+        graft.Fs.listDir(d)
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(p => StateFile(b, s"$partitionBy=$b/${p.getFileName}", Files.size(p)))
+      }
+  }
+
+  /** Delete data files with their checksum siblings, and a partition
+    * directory once it is empty.
+    */
+  private def remove(dir: String, files: Seq[StateFile]): Unit = files.foreach { f =>
+    val p = Paths.get(dir, f.path)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    Files.deleteIfExists(p)
+    if (Files.isDirectory(p.getParent) && graft.Fs.listDir(p.getParent).isEmpty)
+      Files.delete(p.getParent)
+  }
 
   /** Nullability/metadata-insensitive view of a schema: parquet reads
     * come back all-nullable, while freshly-projected batches carry
@@ -49,94 +158,47 @@ private[cdc] object MetaTables {
     */
   def normalized(s: StructType): StructType =
     StructType(s.fields.map(f => StructField(f.name, f.dataType, nullable = true)))
+}
 
-  /** The state table's schema: the sidecar when present; self-heals
-    * from a footer-merged read when the sidecar was lost to a torn
-    * write (possible only between the data and sidecar writes of one
-    * apply — single-writer control plane, same contract as
-    * [[WatermarkStore.upsert]]).
-    */
-  def readStateSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val p = sidecar(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val json = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      Some(normalized(DataType.fromJson(json).asInstanceOf[StructType]))
-    } else {
-      try Some(normalized(
-        spark.read.option("mergeSchema", "true").parquet(dir).schema))
-      catch {
-        case e: AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" ||
-              e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          None
-      }
-    }
-  }
+/** One live data file of a state table: its partition value (the
+  * bucket or cohort id), its path relative to the table directory and
+  * its size in bytes.
+  */
+private[cdc] final case class StateFile(bucket: Int, path: String, bytes: Long)
 
-  /** True iff the schema sidecar exists: the driver-side test for "no
-    * state table yet" where a caller only writes the sidecar when absent
-    * — unlike [[readStateSchema]], never falls back to a footer read
-    * (a Spark job).
-    */
-  def hasStateSchema(dir: String): Boolean = java.nio.file.Files.exists(sidecar(dir))
+/** A resumable snapshot's pinned chunk geometry for one table. */
+private[cdc] final case class ChunkBounds(table: String, lo: Long, hi: Long, numChunks: Int)
 
-  def writeStateSchema(dir: String, schema: StructType): Unit = {
-    val p = sidecar(dir)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p, normalized(schema).json.getBytes("UTF-8"))
-  }
+/** The manifest of a state table, `<dir>/_graft_log.json`: its schema
+  * (JSON), its partition column and count, its live data files and the
+  * resumable snapshot's pinned chunk bounds. The data files on disk are only
+  * candidates; a table is exactly what its manifest names, so replacing
+  * the manifest ([[MetaTables.replaceAtomically]]) is the one commit
+  * point of every state write.
+  *
+  *   - The schema is the single-table analog of Delta's transaction-log
+  *     schema: parquet footers can't speak for a table whose buckets
+  *     were written at different times.
+  *   - The partition column and count are the partitioning FUNCTION
+  *     (`pmod(hash(pk), n)` for the pipeline's buckets), which must
+  *     travel with the table, not the code: after a bucket split,
+  *     readers and writers using a stale `n` would scatter keys across
+  *     the wrong directories.
+  *   - Chunk GEOMETRY must be decided once and persisted: a resumed
+  *     snapshot that re-derived lo/hi from a feed that was not actually
+  *     pinned would compute DIFFERENT chunk ranges while chunk ids are
+  *     already marked covered — rows silently missed or duplicated.
+  */
+private[cdc] final case class StateLog(
+    schema: String, partitionBy: String, buckets: Int,
+    files: Seq[StateFile], chunks: Seq[ChunkBounds]) {
+  def struct: StructType = DataType.fromJson(schema).asInstanceOf[StructType]
+  def withSchema(s: StructType): StateLog = copy(schema = MetaTables.normalized(s).json)
+}
 
-  // ---- state-table bucket-count sidecar -----------------------------------
-  // The partitioning FUNCTION (pmod(hash(pk), n)) must travel with the
-  // table, not the code: after a bucket split, readers and writers
-  // using a stale n would scatter keys across the wrong directories.
-  // Same hidden-file seam as the schema sidecar.
-
-  private def bucketSidecar(dir: String) =
-    java.nio.file.Paths.get(dir, "_graft_buckets.json")
-
-  def readBucketCount(dir: String, default: Int): Int = {
-    val p = bucketSidecar(dir)
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toInt
-    else default
-  }
-
-  def writeBucketCount(dir: String, n: Int): Unit = {
-    val p = bucketSidecar(dir)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p, n.toString.getBytes("UTF-8"))
-  }
-
-  // ---- resumable-snapshot chunk-bounds sidecar ----------------------------
-  // Chunk GEOMETRY must be decided once and persisted: a resumed
-  // snapshot that re-derived lo/hi from a feed that was not actually
-  // pinned would compute DIFFERENT chunk ranges while chunk ids are
-  // already marked covered — rows silently missed or duplicated.
-  // Same hidden-file seam as the schema/bucket sidecars.
-
-  private def chunkSidecar(dir: String, table: String) =
-    java.nio.file.Paths.get(dir, s"_graft_chunks_$table.json")
-
-  def readChunkBounds(dir: String, table: String): Option[(Long, Long, Int)] = {
-    val p = chunkSidecar(dir, table)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      val m = """\{"lo":(-?\d+),"hi":(-?\d+),"numChunks":(\d+)\}""".r
-      s.trim match {
-        case m(lo, hi, n) => Some((lo.toLong, hi.toLong, n.toInt))
-        case _ => throw new IllegalStateException(s"unreadable chunk-bounds sidecar $p: $s")
-      }
-    }
-  }
-
-  def writeChunkBounds(dir: String, table: String, lo: Long, hi: Long, numChunks: Int): Unit = {
-    val p = chunkSidecar(dir, table)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p,
-      s"""{"lo":$lo,"hi":$hi,"numChunks":$numChunks}""".getBytes("UTF-8"))
-  }
+private[cdc] object StateLog {
+  def empty(schema: StructType, partitionBy: String, buckets: Int): StateLog =
+    StateLog(MetaTables.normalized(schema).json, partitionBy, buckets, Seq.empty, Seq.empty)
 }
 
 /** One per-table watermark row — the Spark analog of
@@ -180,14 +242,11 @@ object WatermarkGate {
   * (interval union) rather than overwriting — positions only ever
   * grow, so a replayed upsert is idempotent.
   *
-  * Each upsert writes the merged rows to a temp file beside the log
-  * and renames it into place (`ATOMIC_MOVE`): a reader sees the old
-  * file or the new one, never a torn or missing one, and a crash
-  * between the write and the rename leaves only a stray temp file that
-  * no reader opens and the next upsert overwrites. No Spark job, no
-  * commit protocol. java.nio is the same local-FS seam as the
-  * [[MetaTables]] sidecars; a cluster deployment swaps in the Hadoop
-  * FileSystem API (rename-based atomic create) there.
+  * Each upsert replaces the file through
+  * [[MetaTables.replaceAtomically]] (temp file, then `ATOMIC_MOVE`),
+  * the seam that also commits the state-table manifests: a reader sees
+  * the old file or the new one, never a torn or missing one. No Spark
+  * job, no commit protocol.
   *
   * The control-plane state here is deliberately driver-resident: one
   * row per (source, schema, table) — thousands at most (the reference
@@ -213,7 +272,8 @@ final class WatermarkStore(path: String) {
   private def rows: Seq[TableWatermark] =
     cached.getOrElse {
       val r =
-        if (Files.exists(file)) json.readValue(file.toFile, classOf[Array[TableWatermark]]).toSeq
+        if (Files.exists(file))
+          MetaTables.json.readValue(file.toFile, classOf[Array[TableWatermark]]).toSeq
         else Seq.empty
       cached = Some(r)
       r
@@ -254,17 +314,12 @@ final class WatermarkStore(path: String) {
       }
       .toSeq
       .sortBy(w => (w.source, w.schema, w.table))
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(TmpName)
-    Files.write(tmp, json.writeValueAsBytes(merged))
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetaTables.replaceAtomically(file, MetaTables.json.writeValueAsBytes(merged))
     cached = Some(merged)
   }
 }
 
 object WatermarkStore {
   private[cdc] val FileName = "watermarks.json"
-  private[cdc] val TmpName = s".$FileName.tmp"
-
-  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+  private[cdc] val TmpName = MetaTables.tmpName(FileName)
 }

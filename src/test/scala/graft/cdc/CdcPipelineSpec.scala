@@ -74,11 +74,18 @@ class CdcPipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
   /** Bucket count the per-bucket specs preset: a new table starts at
-    * one bucket, so specs about touched, cold or emptied buckets write
-    * the bucket-count sidecar before the first apply.
+    * one bucket, so specs about touched, cold or emptied buckets commit
+    * an empty manifest with this count and `feed`'s schema before the
+    * first apply.
     */
   private val Preset = 8
-  private def presetBuckets(dir: String): Unit = MetaTables.writeBucketCount(dir, Preset)
+  private def presetBuckets(dir: String, feed: org.apache.spark.sql.DataFrame): Unit =
+    MetaTables.writeLog(dir, StateLog.empty(
+      feed.withColumn(CdcPipeline.bucketCol, org.apache.spark.sql.functions.lit(0)).schema,
+      CdcPipeline.bucketCol, Preset))
+
+  /** The table's schema, as its manifest records it. */
+  private def stateSchema(dir: String) = MetaTables.readLog(dir).get.struct
 
   /** Run `body`; return the Spark jobs it started and the plans of the
     * parquet writes (insert commands) it executed. Listener events
@@ -104,6 +111,19 @@ class CdcPipelineSpec extends AnyFunSuite {
       Thread.sleep(1000)
     } finally spark.sparkContext.removeSparkListener(listener)
     (jobs.get(), writes.toArray(Array.empty[String]).toSeq)
+  }
+
+  /** Run `body`, stopping it with an injected crash at the first
+    * commit step named `step` taken in `dir`.
+    */
+  private def crashAt(dir: String, step: String)(body: => Any): Unit = {
+    val at = java.nio.file.Paths.get(dir).toString
+    MetaTables.onStep = (d, s) =>
+      if (d == at && s == step) throw new IllegalStateException(s"injected crash at $s")
+    try {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage == s"injected crash at $step", e.getMessage)
+    } finally MetaTables.onStep = (_, _) => ()
   }
 
   private def maxMtime(dir: String): Long = {
@@ -204,7 +224,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
     // batch 1: the whole feed — populates one bucket per pk (mod
     // hash collisions)
-    presetBuckets(s"$base/state")
+    presetBuckets(s"$base/state", full)
     CdcPipeline.applyBatch(spark, store, s"$base/state", "src", full)
     def bucketFiles(): Map[String, Long] = {
       def walk(f: File): Seq[File] =
@@ -270,7 +290,7 @@ class CdcPipelineSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
         == expected)
     // a third, schema-stable batch takes the COW path against the
-    // evolved table (sidecar now carries `region`)
+    // evolved table (the manifest now carries `region`)
     CdcPipeline.applyBatch(spark, store, s"$base/state", "src",
       full.filter(col("pk") === 2L).withColumn("pos", col("pos") + 10000)
         .withColumn("region", lit("apac")))
@@ -283,8 +303,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     val store = new WatermarkStore(s"$base/wm")
     val full = ChangeFeed.fromEvents(Tables.events(spark, sf))
     // snapshot is consistent as-of the PINNED position 0-500
-    CdcPipeline.bootstrapSnapshot(spark, store, s"$base/state", "src",
-      full.filter(col("pos") <= 500), "src:0-500")
+    CdcPipeline.resumableSnapshot(spark, store, s"$base/state", "src",
+      full.filter(col("pos") <= 500), chunkBy = "pk", numChunks = 1, pos = "src:0-500")
     val t1 = maxMtime(s"$base/state")
     // an incremental batch wholly below the snapshot position must
     // gate to a no-op — the docs' "apply only above the watermark"
@@ -394,7 +414,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val base = s"target/tmp/cdcsplit-${System.nanoTime()}"
     val store = new WatermarkStore(s"$base/wm")
     val dir = s"$base/state"
-    presetBuckets(dir)
+    presetBuckets(dir, ChangeFeed.fromEvents(Tables.events(spark, sf)))
     CdcPipeline.applyBatch(spark, store, dir, "src",
       ChangeFeed.fromEvents(Tables.events(spark, sf)))
     val before = stateRows(dir)
@@ -416,14 +436,14 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(stateRows(dir) == before)
     val n = Preset
     val invariantViolations = spark.read
-      .schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
+      .schema(stateSchema(dir)).parquet(dir)
       .select(col("pk"), col("bucket"))
       .withColumn("oldb", pmod(hash(col("pk")), lit(n)))
       .filter(col("bucket") =!= col("oldb") && col("bucket") =!= col("oldb") + n)
       .count()
     assert(invariantViolations == 0)
 
-    // applyBatch after the split routes by the NEW count (sidecar wins
+    // applyBatch after the split routes by the NEW count (the manifest wins
     // over the code default) and stays a no-op-safe COW apply
     CdcPipeline.applyBatch(spark, store, dir, "src2",
       ChangeFeed.fromEvents(Tables.events(spark, sf)))
@@ -444,7 +464,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val (c1, c2) = (q1.toLong, q2.toLong)
 
     // base via COW, then two O(batch) delta appends
-    presetBuckets(dir)
+    presetBuckets(dir, full)
     CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= c1))
     CdcPipeline.appendDeltas(spark, store, dir, "src",
       full.filter(col("pos") > c1 && col("pos") <= c2))
@@ -712,7 +732,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val base = s"target/tmp/cdccompactnoop-${System.nanoTime()}"
     val store = new WatermarkStore(s"$base/wm")
     val dir = s"$base/state"
-    presetBuckets(dir)
+    presetBuckets(dir, ChangeFeed.fromEvents(Tables.events(spark, sf)))
     CdcPipeline.applyBatch(spark, store, dir, "src",
       ChangeFeed.fromEvents(Tables.events(spark, sf)))
     // COW wrote one file per bucket — every bucket is under any
@@ -749,7 +769,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     // must redistribute every key-version (base rows, delta rows,
     // tombstones) into the doubled layout so read-time latest-wins
     // still resolves each key from exactly one bucket
-    presetBuckets(dir)
+    presetBuckets(dir, full)
     CdcPipeline.applyBatch(spark, store, dir, "src",
       full.filter(col("pos") <= 500))
     CdcPipeline.appendDeltas(spark, store, dir, "src",
@@ -780,14 +800,14 @@ class CdcPipelineSpec extends AnyFunSuite {
     val full = ChangeFeed.fromEvents(Tables.events(spark, sf))
     CdcPipeline.applyBatch(spark, store, dir, "src", full)
     // an evolved delta (new column) cannot append under the old
-    // sidecar schema — appendDeltas must take the one-off migration
+    // manifest schema — appendDeltas must take the one-off migration
     // path instead, after which old rows null-fill the new column
     CdcPipeline.appendDeltas(spark, store, dir, "src",
       full.filter(col("pk").isin(0L, 1L))
         .withColumn("pos", col("pos") + 10000)
         .withColumn("region", lit("emea")))
     val st = CdcPipeline.readState(spark, dir)
-    assert(st.columns.contains("region"), "sidecar schema must evolve")
+    assert(st.columns.contains("region"), "the manifest schema must evolve")
     assert(st.filter(col("region") === "emea").count() == 2)
     assert(st.filter(col("region").isNull).count() > 0)
     // a NARROWER delta (schema-stable subset) appends as a plain MOR
@@ -851,7 +871,7 @@ class CdcPipelineSpec extends AnyFunSuite {
         .select(col("pos"), lit(new java.sql.Timestamp(0L)).as("ts"), col("pk"),
           col("op"), lit(1.0).as("value"), lit("{}").as("props"))
     // two keys in different buckets
-    presetBuckets(dir)
+    presetBuckets(dir, feed())
     CdcPipeline.applyBatch(spark, store, dir, "src",
       feed((1L, 10L, "insert"), (2L, 11L, "insert")))
     assert(CdcPipeline.bucketFileStats(dir).size == 2, "keys 10 and 11 must not share a bucket")
@@ -1033,17 +1053,17 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
     assert(stateWrites(splitWrites) == 1, s"one rewrite (saw ${stateWrites(splitWrites)})")
     assert(state() == before)
-    val rows = spark.read.schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
+    val rows = spark.read.schema(stateSchema(dir)).parquet(dir)
     assert(rows.filter(col("bucket") =!= pmod(hash(col("pk")), lit(32))).count() == 0)
     assert(rows.filter(col("bucket") % 8 =!= pmod(hash(col("pk")), lit(8))).count() == 0)
 
     // 3. a static rewrite after the split (the additive schema
-    // migration) keeps the table's bucket count: the sidecar survives
+    // migration) keeps the table's bucket count: the manifest carries it
     CdcPipeline.applyBatch(spark, store, dir, "src",
       full.filter(col("pk").isin(0L, 1L)).withColumn("pos", col("pos") + 10000)
         .withColumn("region", lit("emea")))
     assert(CdcPipeline.bucketCount(dir) == 32)
-    val migrated = spark.read.schema(MetaTables.readStateSchema(spark, dir).get).parquet(dir)
+    val migrated = spark.read.schema(stateSchema(dir)).parquet(dir)
     assert(migrated.filter(col("bucket") =!= pmod(hash(col("pk")), lit(32))).count() == 0)
   }
 
@@ -1070,5 +1090,62 @@ class CdcPipelineSpec extends AnyFunSuite {
       df.select("pk", "pos", "op").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(rows(CdcPipeline.readState(spark, dir)) == rows(ChangeFeed.latestState(full)))
+  }
+
+  test("a split or a schema migration stopped before its manifest rename leaves the table as it was") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = s"target/tmp/cdccrashwin-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    def state(): Set[(Long, Long, String)] =
+      CdcPipeline.readState(spark, dir).select("pk", "pos", "op").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= 500))
+    val before = state()
+    val evolved = full.filter(col("pk").isin(0L, 1L))
+      .withColumn("pos", col("pos") + 10000).withColumn("region", lit("emea"))
+    // both steps between the first new data file and the rename
+    Seq("written", "staged").foreach { step =>
+      crashAt(dir, step)(CdcPipeline.splitBuckets(spark, dir, factor = 4))
+      assert(state() == before, s"a split stopped at $step changed the state")
+      assert(CdcPipeline.bucketCount(dir) == 1,
+        s"a split stopped at $step changed the bucket count")
+      crashAt(dir, step)(CdcPipeline.applyBatch(spark, store, dir, "src", evolved))
+      assert(state() == before, s"a migration stopped at $step changed the state")
+      assert(CdcPipeline.bucketCount(dir) == 1)
+      assert(!CdcPipeline.readState(spark, dir).columns.contains("region"),
+        s"a migration stopped at $step changed the schema")
+    }
+    // the stray files are on disk; the next apply sweeps them and
+    // adopts none: every data file left is one the manifest names, and
+    // a plain directory read sees exactly the state
+    CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") > 500))
+    assert(state() == expectedState())
+    val named = MetaTables.readLog(dir).get.files.map(_.path).toSet
+    val onDisk = graft.Fs.walkSeq(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => java.nio.file.Paths.get(dir).relativize(p).toString).toSet
+    assert(onDisk == named, s"stray files adopted or left: ${onDisk -- named}")
+    assert(stateRows(dir) == expectedState())
+  }
+
+  test("a steady-state COW apply on an existing table runs exactly 7 Spark jobs") {
+    import org.apache.spark.sql.functions.col
+    val base = s"target/tmp/cdccowjobs-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") <= 500))
+    val (jobs, writes) = sparkWork {
+      CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") > 500))
+    }
+    // the batch's GTID set and its touched buckets (one aggregation
+    // each) and the merge write, with their shuffle stages. Nothing
+    // materializes the merge first and nothing collects the buckets it
+    // left non-empty: the manifest names the written files.
+    assert(writes.size == 1)
+    assert(jobs == 7, s"expected 7 Spark jobs, saw $jobs")
+    assert(stateRows(dir) == expectedState())
   }
 }
