@@ -1,11 +1,14 @@
 package graft.cdc
 
+import java.util.BitSet
+
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 
-import graft.functions.GtidRangesAgg
+import graft.functions.GtidAccum
 import graft.model.{GtidSet, GtidRange}
 
 /** The wired incremental ("增量") pipeline — the running-stream form
@@ -16,11 +19,12 @@ import graft.model.{GtidSet, GtidRange}
   *   - `readStream` over the events parquet dir stands in for the
   *     binlog tail (offsets live in the checkpoint, replacing the
   *     mutex-guarded GTID state — restart resumes, no reprocessing);
-  *   - each micro-batch computes its GTID set in-plan
-  *     ([[GtidRangesAgg]]) and is applied ONLY when the watermark
-  *     store does not already cover it ([[GtidSet.subsetOf]]) — the
-  *     docs' "apply only above the watermark" rule, which makes a
-  *     replayed batch (fresh checkpoint, duplicated feed) a no-op;
+  *   - each micro-batch computes its GTID set (and the buckets it
+  *     touches) in one single-stage pass ([[gate]]) and is applied
+  *     ONLY when the watermark store does not already cover it
+  *     ([[GtidSet.subsetOf]]) — the docs' "apply only above the
+  *     watermark" rule, which makes a replayed batch (fresh
+  *     checkpoint, duplicated feed) a no-op;
   *   - apply = latest-wins MERGE of the batch into a parquet state
   *     table (`foreachBatch`; at warehouse scale the same callback
   *     would be a Delta/Iceberg MERGE — the parquet
@@ -87,28 +91,36 @@ object CdcPipeline {
           .parquet(eventsDir)))
   }
 
-  /** The batch GTID set, computed in-plan (one partial+final agg, one
-    * row to the driver — control-plane only).
+  /** The batch GTID set: a thin call of the gate pass ([[gate]]). */
+  def batchGtidSet(batch: DataFrame, uuid: String): GtidSet = gate(batch, uuid, lit(0))._1
+
+  /** The gate pass: a micro-batch's GTID set and the buckets its rows
+    * fall in, from ONE single-stage Spark job with no exchange. Each
+    * partition folds its positions into a [[GtidAccum]] (batched, so any
+    * row order stays O(n log B)) and sets one bit per `bucket` value; the
+    * driver merges the ≤ numPartitions summaries. An empty batch answers
+    * with the empty set from the same job, so no separate isEmpty probe
+    * runs — per-batch control-plane cost matters at a production trigger
+    * rate.
     */
-  def batchGtidSet(batch: DataFrame, uuid: String): GtidSet = {
+  private[cdc] def gate(batch: DataFrame, uuid: String, bucket: Column): (GtidSet, Set[Int]) = {
     import batch.sparkSession.implicits._
-    // No separate isEmpty probe: the aggregator's finish(zero) on an
-    // empty batch is the empty range list, so one agg job answers both
-    // questions — per-batch control-plane cost matters at a production
-    // trigger rate.
-    val ranges = batch
-      .select(lit(uuid).as("uuid"), col("pos"))
-      .as[(String, Long)]
-      .select(GtidRangesAgg.toColumn)
-      .head()
-    ranges.foldLeft(GtidSet.empty) { case (acc, (u, s, e)) =>
-      acc.addRange(u, GtidRange(s, e))
-    }
+    val parts = batch.select(col("pos"), bucket).as[(Long, Int)]
+      .mapPartitions { rows =>
+        val acc = GtidAccum.empty
+        val bits = new BitSet()
+        rows.foreach { case (pos, b) => acc.add(uuid, pos); bits.set(b) }
+        Iterator.single((acc.result, bits))
+      }(Encoders.kryo[(GtidSet, BitSet)])
+      .collect()
+    val touched = new BitSet()
+    parts.foreach(p => touched.or(p._2))
+    (parts.map(_._1).foldLeft(GtidSet.empty)(_ merge _), touched.stream().toArray.toSet)
   }
 
   /** Initial bucket count of a new state table: one. Every write puts
     * one file in each bucket it touches, and a file has a fixed cost
-    * (see [[writeFiles]]), so a small table pays per bucket, not per
+    * (see [[byBucket]]), so a small table pays per bucket, not per
     * row. The LIVE count is table state, not code (the [[StateLog]]
     * manifest): every state write ends in [[maybeSplit]] against
     * [[targetBucketBytes]], so the count tracks state volume instead of
@@ -139,26 +151,59 @@ object CdcPipeline {
   /** Deterministic pk → bucket assignment (Murmur3, same function a
     * shuffle-hash-partitioning of the state would use).
     */
-  private def bucketOf(n: Int): Column = pmod(hash(col("pk")), lit(n))
+  private[cdc] def bucketOf(n: Int): Column = pmod(hash(col("pk")), lit(n))
 
   /** Run `body` only if the batch's GTID set is non-empty and not
     * already covered by the watermark; advance the watermark after.
-    * The shared dedupe/resume protocol of every apply flavor.
+    * The shared dedupe/resume protocol of every apply flavor. One
+    * [[gate]] pass answers the gate and hands `body` the buckets (of
+    * `n`) the batch touches.
     */
   private def gatedApply(
       spark: SparkSession,
       store: WatermarkStore,
       source: String,
       batch: DataFrame,
-      table: String = "events"
-  )(body: => Unit): Unit = {
-    val set = batchGtidSet(batch, source)
+      n: Int,
+      table: String
+  )(body: Set[Int] => Unit): Unit = {
+    val (set, touched) = gate(batch, source, bucketOf(n))
     if (set.isEmpty) return
     if (store.covered(spark, source, SnapshotJob.schemaName, table, set)) return
-    body
+    body(touched)
     store.upsert(spark, Seq(
       TableWatermark(source, SnapshotJob.schemaName, table, set.serialize)))
   }
+
+  /** Latest-wins per key over `rows` (state and/or feed rows carrying
+    * their bucket), hash-partitioned on the bucket column to `n`
+    * partitions. The merge's one shuffle: `bucket` is a function of
+    * `pk`, so windowing by `(bucket, pk)` groups exactly as
+    * [[ChangeFeed.latestState]]'s `pk` window does, and the bucket
+    * partitioning already satisfies that window — the write needs no
+    * second exchange.
+    */
+  private def latestWins(rows: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col(bucketCol), col("pk")).orderBy(col("pos").desc)
+    byBucket(rows, n)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && col("op") =!= "delete")
+      .drop("rn")
+  }
+
+  /** `rows` hash-partitioned on the bucket column to `n` partitions,
+    * the shape every state write ([[MetaTables.write]]) takes: one task,
+    * so one file, per bucket it touches.
+    *
+    * A file is the unit cost of a write: on a local FS each one costs
+    * ~15–20 ms of task time whatever its size, because Hadoop's local
+    * FS without native libs forks `chmod` for every directory and file
+    * it creates (per op on a 4-core host: mkdirs 4.9 ms, create 9.8 ms,
+    * setPermission 8.0 ms; 100 rows into 64 bucket dirs 1.5 s vs one
+    * dir 0.2 s). That is why the bucket count follows bytes
+    * ([[maybeSplit]]).
+    */
+  private def byBucket(rows: DataFrame, n: Int): DataFrame = rows.repartition(n, col(bucketCol))
 
   /** Apply one micro-batch: GTID-gate, then a bucketed copy-on-write
     * MERGE into the state table, then the watermark upsert. Public so
@@ -174,7 +219,10 @@ object CdcPipeline {
     * state), not O(state): the Delta/Iceberg copy-on-write MERGE
     * pattern without the dependency. Untouched buckets' files are
     * never opened, and the schema comes from the manifest (no footer
-    * inference).
+    * inference). The batch is read twice: once by the [[gate]] pass,
+    * which also names the touched buckets, and once by the merge, whose
+    * one shuffle ([[latestWins]]) is the write's. Three Spark jobs in
+    * all: the gate, the shuffle's map stage and the write.
     *
     * A batch arriving with an evolved schema — the downstream meaning
     * of a gated additive DDL event, which the reference drops in its
@@ -193,37 +241,36 @@ object CdcPipeline {
       source: String,
       batch: DataFrame,
       table: String = "events"
-  ): Unit = gatedApply(spark, store, source, batch, table) {
+  ): Unit = {
     val log = MetaTables.readLog(stateDir)
     val n = log.fold(stateBuckets)(_.buckets)
-    val bucketed = batch.withColumn(bucketCol, bucketOf(n))
-    log match {
-      case None =>
-        // first batch: no state yet
-        val out = ChangeFeed.latestState(bucketed)
-        write(stateDir, None, out, StateLog.empty(out.schema, bucketCol, n), _ => true)
+    gatedApply(spark, store, source, batch, n, table) { touched =>
+      val bucketed = batch.withColumn(bucketCol, bucketOf(n))
+      log match {
+        case None =>
+          // first batch: no state yet
+          val out = latestWins(bucketed, n)
+          MetaTables.write(stateDir, None, out, StateLog.empty(out.schema, bucketCol, n), _ => true)
 
-      case Some(old) =>
-        val target = mergedSchema(old.struct, bucketed.schema)
-        if (target != old.struct) {
-          // evolved batch → one-off migration: conform ALL buckets so
-          // the table has a single schema again
-          val out = ChangeFeed.latestState(
-            SchemaEvolution.conform(MetaTables.read(spark, stateDir, old, old.files), target)
-              .unionByName(SchemaEvolution.conform(bucketed, target)))
-          write(stateDir, log, out, old.withSchema(out.schema), _ => true)
-        } else {
-          // steady state: O(batch) COW. Touched buckets = one small
-          // distinct over the batch (≤ bucket-count values — control
-          // plane)
-          val touched = bucketed.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet
-          val st = MetaTables.read(spark, stateDir, old, old.files.filter(f => touched(f.bucket)))
-          val out = ChangeFeed.latestState(
-            st.unionByName(SchemaEvolution.conform(bucketed, target)))
-          write(stateDir, log, out, old, touched)
-        }
+        case Some(old) =>
+          val target = mergedSchema(old.struct, bucketed.schema)
+          if (target != old.struct) {
+            // evolved batch → one-off migration: conform ALL buckets so
+            // the table has a single schema again
+            val out = latestWins(
+              SchemaEvolution.conform(MetaTables.read(spark, stateDir, old, old.files), target)
+                .unionByName(SchemaEvolution.conform(bucketed, target)), n)
+            MetaTables.write(stateDir, log, out, old.withSchema(out.schema), _ => true)
+          } else {
+            // steady state: O(batch) COW over the buckets the gate pass
+            // saw the batch touch
+            val st = MetaTables.read(spark, stateDir, old, old.files.filter(f => touched(f.bucket)))
+            val merged = latestWins(st.unionByName(SchemaEvolution.conform(bucketed, target)), n)
+            MetaTables.write(stateDir, log, merged, old, touched)
+          }
+      }
+      maybeSplit(spark, stateDir)
     }
-    maybeSplit(spark, stateDir)
   }
 
   /** Merge-on-read alternative to [[applyBatch]]: append the batch's
@@ -258,8 +305,9 @@ object CdcPipeline {
       val bucketed = batch.withColumn(bucketCol, bucketOf(log.buckets))
       if (mergedSchema(log.struct, bucketed.schema) != log.struct)
         applyBatch(spark, store, stateDir, source, batch, table)
-      else gatedApply(spark, store, source, batch, table) {
-        write(stateDir, Some(log), SchemaEvolution.conform(bucketed, log.struct), log, _ => false)
+      else gatedApply(spark, store, source, batch, log.buckets, table) { _ =>
+        MetaTables.write(stateDir, Some(log),
+          byBucket(SchemaEvolution.conform(bucketed, log.struct), log.buckets), log, _ => false)
         maybeSplit(spark, stateDir)
       }
   }
@@ -370,8 +418,8 @@ object CdcPipeline {
     MetaTables.readLog(stateDir) match {
       case None => () // DDL ahead of any state: nothing to migrate
       case Some(old) =>
-        def rewrite(df: DataFrame): Unit =
-          write(stateDir, Some(old), df, old.withSchema(df.schema), _ => true)
+        def rewrite(df: DataFrame): Unit = MetaTables.write(
+          stateDir, Some(old), byBucket(df, old.buckets), old.withSchema(df.schema), _ => true)
         val schema = old.struct
         op match {
           case DdlOp.Truncate =>
@@ -451,29 +499,13 @@ object CdcPipeline {
     else {
       val old = logOf(stateDir)
       val hot = targets.toSet
-      val merged = ChangeFeed.latestState(
-        MetaTables.read(spark, stateDir, old, old.files.filter(f => hot(f.bucket))))
-      write(stateDir, Some(old), merged, old, hot)
+      val merged = latestWins(
+        MetaTables.read(spark, stateDir, old, old.files.filter(f => hot(f.bucket))), old.buckets)
+      MetaTables.write(stateDir, Some(old), merged, old, hot)
       maybeSplit(spark, stateDir)
       targets
     }
   }
-
-  /** Write `df` in the bucketed layout, one file per bucket it touches
-    * (hash repartition on the bucket column to `next.buckets` tasks),
-    * and commit it ([[MetaTables.write]]).
-    *
-    * A file is the unit cost of a write: on a local FS each one costs
-    * ~15–20 ms of task time whatever its size, because Hadoop's local
-    * FS without native libs forks `chmod` for every directory and file
-    * it creates (per op on a 4-core host: mkdirs 4.9 ms, create 9.8 ms,
-    * setPermission 8.0 ms; 100 rows into 64 bucket dirs 1.5 s vs one
-    * dir 0.2 s). That is why the bucket count follows bytes
-    * ([[maybeSplit]]).
-    */
-  private def write(stateDir: String, prev: Option[StateLog], df: DataFrame,
-      next: StateLog, replaced: Int => Boolean): Unit =
-    MetaTables.write(stateDir, prev, df.repartition(next.buckets, col(bucketCol)), next, replaced)
 
   /** CRASH-RESUMABLE snapshot bootstrap by chunk — the reference's
     * snapshot-then-stream protocol (`docs/全量抓取逻辑.md:12-52`): the
@@ -582,8 +614,8 @@ object CdcPipeline {
       val (cLo, cHi) = (lo + k * width, lo + (k + 1) * width - 1)
       val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
       val cur = logOf(stateDir)
-      write(stateDir, Some(cur),
-        chunk.withColumn(bucketCol, bucketOf(cur.buckets)), cur, _ => false)
+      MetaTables.write(stateDir, Some(cur),
+        byBucket(chunk.withColumn(bucketCol, bucketOf(cur.buckets)), cur.buckets), cur, _ => false)
       maybeSplit(spark, stateDir)
       written += 1
       if (written > failAfterChunks)
@@ -674,7 +706,8 @@ object CdcPipeline {
     val st = MetaTables.read(spark, stateDir, log, log.files)
       .drop(bucketCol)
       .withColumn(bucketCol, bucketOf(next))
-    write(stateDir, Some(log), st, log.withSchema(st.schema).copy(buckets = next), _ => true)
+    MetaTables.write(stateDir, Some(log), byBucket(st, next),
+      log.withSchema(st.schema).copy(buckets = next), _ => true)
     next
   }
 

@@ -73,10 +73,12 @@ object GtidAccum {
 }
 
 /** Typed aggregator: a stream of (uuid, gno) transaction ids -> the
-  * merged interval list, i.e. the distributed version of the
-  * reference's mutex-guarded running GTID union
-  * (`internal/model/gtid.go:58-72`, call site
-  * `internal/cannal/incremental.go:195-208`).
+  * merged interval set in the canonical MySQL text form, i.e. the
+  * distributed version of the reference's mutex-guarded running GTID
+  * union (`internal/model/gtid.go:58-72`, call site
+  * `internal/cannal/incremental.go:195-208`) — the shape persisted as a
+  * per-table watermark (`go_cdc_table_meta.last_pos`,
+  * `internal/model/tablemeta.go:30`).
   *
   * Order-insensitive and idempotent (interval union), so it is safe as
   * a shuffle-partial aggregate: Spark runs `reduce` map-side and
@@ -85,30 +87,6 @@ object GtidAccum {
   * stays tiny as long as streams are mostly contiguous per server
   * uuid, and per-row cost stays amortized-linear for ANY row order
   * (see [[GtidAccum]]).
-  */
-object GtidRangesAgg extends Aggregator[(String, Long), GtidAccum, Seq[(String, Long, Long)]] {
-  override def zero: GtidAccum = GtidAccum.empty
-  override def reduce(b: GtidAccum, a: (String, Long)): GtidAccum = b.add(a._1, a._2)
-  override def merge(b1: GtidAccum, b2: GtidAccum): GtidAccum =
-    new GtidAccum(b1.result.merge(b2.result),
-      scala.collection.mutable.ArrayBuffer.empty)
-  /** The uuid dimension survives into the output — ranges from
-    * different server uuids can overlap numerically, so flattening
-    * them would be ambiguous for multi-uuid streams. Shape matches
-    * [[GtidStringAgg]]'s serialized `uuid:s-e` form, one row per range.
-    */
-  override def finish(b: GtidAccum): Seq[(String, Long, Long)] =
-    b.result.intervals.toSeq.sortBy(_._1).flatMap { case (u, rs) =>
-      rs.map(r => (u, r.start, r.end))
-    }
-  override def bufferEncoder: Encoder[GtidAccum] = Encoders.kryo[GtidAccum]
-  override def outputEncoder: Encoder[Seq[(String, Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-}
-
-/** Same union, but finishing into the canonical MySQL text form —
-  * the shape persisted as a per-table watermark (`go_cdc_table_meta
-  * .last_pos`, `internal/model/tablemeta.go:30`).
   */
 object GtidStringAgg extends Aggregator[(String, Long), GtidAccum, String] {
   override def zero: GtidAccum = GtidAccum.empty

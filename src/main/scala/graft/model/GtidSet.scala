@@ -19,7 +19,7 @@ final case class GtidRange(start: Long, end: Long) {
   *
   * This type doubles as the offset of a CDC stream (JSON/string
   * serialized into a Structured Streaming checkpoint) and as the
-  * aggregation buffer of [[graft.functions.GtidRangesAgg]].
+  * running union of [[graft.functions.GtidAccum]].
   */
 final case class GtidSet(intervals: Map[String, Vector[GtidRange]]) {
 

@@ -51,8 +51,8 @@ final case class TxBatch(tx: Long, n_rows: Int, payloads: Seq[String])
   *   - binlog tail (`incremental.go:180-232`) ⇒ `readStream` source
   *     feeding [[graft.cdc.ChangeFeed.fromEvents]]-shaped rows
   *     ([[graft.cdc.CdcPipeline]] wires it end-to-end);
-  *   - positions/offsets (`gtid.go`) ⇒ checkpointed offsets; in-plan
-  *     GTID tracking via [[graft.functions.GtidRangesAgg]];
+  *   - positions/offsets (`gtid.go`) ⇒ checkpointed offsets; per-batch
+  *     GTID tracking via [[graft.cdc.CdcPipeline.batchGtidSet]];
   *   - event filtering (`incremental_event.go:15-29`) ⇒
   *     `stream.filter(FilterRule.toColumn(...))`;
   *   - tx buffering (`handler.go:55-82`) ⇒ flatMapGroupsWithState

@@ -113,6 +113,12 @@ class CdcPipelineSpec extends AnyFunSuite {
     (jobs.get(), writes.toArray(Array.empty[String]).toSeq)
   }
 
+  /** `Exchange` operators in a physical plan's formatted description
+    * (each node is listed once as `(k) Exchange`).
+    */
+  private def exchanges(plan: String): Int =
+    "(?m)^\\(\\d+\\) Exchange\\b".r.findAllMatchIn(plan).size
+
   /** Run `body`, stopping it with an injected crash at the first
     * commit step named `step` taken in `dir`.
     */
@@ -1130,7 +1136,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(stateRows(dir) == expectedState())
   }
 
-  test("a steady-state COW apply on an existing table runs exactly 7 Spark jobs") {
+  test("a steady-state COW apply on an existing table runs exactly 3 Spark jobs") {
     import org.apache.spark.sql.functions.col
     val base = s"target/tmp/cdccowjobs-${System.nanoTime()}"
     val dir = s"$base/state"
@@ -1140,12 +1146,64 @@ class CdcPipelineSpec extends AnyFunSuite {
     val (jobs, writes) = sparkWork {
       CdcPipeline.applyBatch(spark, store, dir, "src", full.filter(col("pos") > 500))
     }
-    // the batch's GTID set and its touched buckets (one aggregation
-    // each) and the merge write, with their shuffle stages. Nothing
-    // materializes the merge first and nothing collects the buckets it
-    // left non-empty: the manifest names the written files.
+    // the gate pass (the batch's GTID set and touched buckets in one
+    // single-stage job), then the merge write: its one shuffle's map
+    // stage and the write itself. Nothing materializes the merge first
+    // and nothing collects the buckets it left non-empty: the manifest
+    // names the written files.
     assert(writes.size == 1)
-    assert(jobs == 7, s"expected 7 Spark jobs, saw $jobs")
+    assert(exchanges(writes.head) == 1, s"the merge write shuffles once:\n${writes.head}")
+    assert(jobs == 3, s"expected 3 Spark jobs, saw $jobs")
     assert(stateRows(dir) == expectedState())
+  }
+
+  test("a compaction that folds one bucket runs exactly 2 Spark jobs through one shuffle") {
+    import org.apache.spark.sql.functions.col
+    val base = s"target/tmp/cdccompactjobs-${System.nanoTime()}"
+    val dir = s"$base/state"
+    val store = new WatermarkStore(s"$base/wm")
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    presetBuckets(dir, full)
+    CdcPipeline.applyBatch(spark, store, dir, "src", full)
+    CdcPipeline.appendDeltas(spark, store, dir, "src",
+      full.filter(col("pk") === 0L).withColumn("pos", col("pos") + 10000))
+    val (jobs, writes) = sparkWork {
+      assert(CdcPipeline.compact(spark, dir, maxFilesPerBucket = 1).size == 1)
+    }
+    // the merge's shuffle map stage and the write
+    assert(writes.size == 1)
+    assert(exchanges(writes.head) == 1, s"the compaction shuffles once:\n${writes.head}")
+    assert(jobs == 2, s"expected 2 Spark jobs, saw $jobs")
+    assert(CdcPipeline.bucketFileStats(dir).forall(_._2 == 1))
+  }
+
+  test("the gate short-circuits: an empty or already-covered batch runs one Spark job and writes nothing") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val base = s"target/tmp/cdcgateshort-${System.nanoTime()}"
+    val full = ChangeFeed.fromEvents(Tables.events(spark, sf)).localCheckpoint(true)
+    val seen = full.filter(col("pos") <= 500)
+    def parquetFiles(dir: String): Set[String] = graft.Fs.walkSeq(Paths.get(dir))
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(_.toString).toSet
+    for (mode <- Seq("cow", "mor")) {
+      val dir = s"$base/$mode/state"
+      val store = new WatermarkStore(s"$base/$mode/wm")
+      def apply(b: DataFrame): Unit =
+        if (mode == "cow") CdcPipeline.applyBatch(spark, store, dir, "src", b)
+        else CdcPipeline.appendDeltas(spark, store, dir, "src", b)
+      apply(seen)
+      val log = Paths.get(dir, "_graft_log.json")
+      val (logBytes, logMtime) = (Files.readAllBytes(log), Files.getLastModifiedTime(log))
+      val files = parquetFiles(dir)
+      for ((what, batch) <- Seq("empty" -> full.filter(col("pos") < 0), "redelivered" -> seen)) {
+        val (jobs, writes) = sparkWork(apply(batch))
+        assert(jobs == 1, s"$mode, $what batch: expected 1 Spark job, saw $jobs")
+        assert(writes.isEmpty, s"$mode, $what batch wrote parquet")
+        assert(parquetFiles(dir) == files, s"$mode, $what batch changed the data files")
+        assert(Files.readAllBytes(log).sameElements(logBytes) &&
+          Files.getLastModifiedTime(log) == logMtime, s"$mode, $what batch changed the manifest")
+      }
+    }
   }
 }
