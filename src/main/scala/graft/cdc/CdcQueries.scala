@@ -1496,7 +1496,7 @@ object CdcQueries {
     * [[graft.sources.SocketTransport]] through the reconnect ladder —
     * with the FIRST connection killed mid-transaction, so the gate
     * only passes if a torn fetch heals without loss or duplication.
-    * The redelivered cumulative tail then gates to a no-op. Same
+    * The same rows, applied a second time, then gate to a no-op. Same
     * oracle contract as `cdc_full_protocol`: per-key provenance
     * (snapshot keys keep `props`, wire-transported keys read NULL)
     * comes out right only if the snapshot, auth, wire framing,
@@ -1548,11 +1548,10 @@ object CdcQueries {
         val t = new ReconnectingTransport(
           new SocketTransport("127.0.0.1", server.port, "repl", "s3cret"),
           sleep = _ => ()) // injectable clock: no wall-time in the gate
-        CdcPipeline.applyBatch(s, store, dir, "harness-src",
-          s.createDataset(t.fetch()).toDF())
-        // at-least-once: the cumulative tail redelivers, gates to no-op
-        CdcPipeline.applyBatch(s, store, dir, "harness-src",
-          s.createDataset(t.fetch()).toDF())
+        val batch = s.createDataset(t.fetch()).toDF()
+        CdcPipeline.applyBatch(s, store, dir, "harness-src", batch)
+        // at-least-once: the same rows redelivered gate to a no-op
+        CdcPipeline.applyBatch(s, store, dir, "harness-src", batch)
       } finally server.stop()
     }
     CdcPipeline.readState(s, s"$base/state")

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.zip.CRC32
 
-import graft.model.GtidSet
 import graft.streaming.FeedRow
 
 /** Binary binlog-event codec — the last buildable slice of the
@@ -706,27 +705,17 @@ object BinlogBuffers {
 /** The registry-backed decoding transport the `binlog:<id>` buffer-id
   * spelling routes to ([[GtidReplayStream.defaultTransport]]).
   * Segments are immutable once registered and the list is append-only,
-  * so each segment is decoded exactly ONCE per transport and cached —
-  * `fetch()` runs twice per micro-batch (latestOffset +
-  * planInputPartitions) and a long-lived stream over a growing archive
-  * would otherwise pay O(segments²) cumulative CRC+parse work.
-  * [[commit]] trims the decoded tail to the uncommitted window; the
-  * registry keeps every segment, so a fresh transport (a query
-  * restart) still replays from the first one.
-  * Single-threaded like the stream that drives it.
+  * so each fetch decodes only the segments registered since the last
+  * one — each segment once per transport. The registry keeps every
+  * segment, so a fresh transport (a query restart) replays from the
+  * first one. Single-threaded like the stream that drives it.
   */
 final class BinlogBufferTransport(id: String) extends BinlogTransport {
   private var segCount = 0
-  private var rows = Vector.empty[FeedRow]
-  override def commit(uuid: String, committed: GtidSet): Unit =
-    rows = rows.filter(r => !committed.contains(uuid, r.pos))
   override def fetch(): Vector[FeedRow] = {
-    val segs = BinlogBuffers.get(id)
-    if (segs.length > segCount) {
-      rows = rows ++ segs.drop(segCount)
-        .flatMap(seg => BinlogDecoder.toFeedRows(BinlogDecoder.decode(seg)))
-      segCount = segs.length
-    }
-    rows // flattened once per new segment, not per fetch
+    val segs = BinlogBuffers.get(id).drop(segCount)
+    val rows = segs.flatMap(seg => BinlogDecoder.toFeedRows(BinlogDecoder.decode(seg)))
+    segCount += segs.length
+    rows
   }
 }

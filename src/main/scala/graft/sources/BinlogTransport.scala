@@ -15,37 +15,33 @@ class TransportException(msg: String, cause: Throwable = null)
   * stream. Unlike a dropped connection this cannot heal on retry: the
   * same bytes decode to the same error, so [[ReconnectingTransport]]
   * fails fast instead of walking the full backoff ladder (which would
-  * burn ~2 minutes of driver-thread sleeps per fetch, twice per
-  * micro-batch, before surfacing the error).
+  * burn ~2 minutes of driver-thread sleeps per fetch before surfacing
+  * the error).
   */
 final class CorruptStreamException(msg: String, cause: Throwable = null)
     extends TransportException(msg, cause)
 
-/** The seam between [[GtidReplayStream]] and the wire: `fetch()`
-  * returns the source's currently-visible event tail (the analog of
-  * the binlog having grown). [[GtidReplayBuffers]] backs the harness
-  * implementation; a production build implements this trait with the
-  * binlog protocol client and NOTHING above the seam changes — the
-  * offset protocol, admission control, partition planning, and
-  * checkpoint resume all operate on what `fetch` returns.
+/** The seam between [[GtidReplayStream]] and the wire. `fetch()`
+  * returns at least every transaction not returned before, each
+  * transaction whole within one call; a fetch that throws advances
+  * nothing. Returning a transaction again is allowed (the stream drops
+  * GTIDs it has already seen), so a transport keeps no replay buffer:
+  * the stream owns the one uncommitted window. A production build
+  * implements this trait with the binlog protocol client and nothing
+  * above the seam changes.
   */
 trait BinlogTransport {
   def fetch(): Vector[FeedRow]
 
-  /** Admission notification, driven by the stream's `commit(end)`:
-    * every `(uuid, pos)` in `committed` has been durably admitted
-    * into a finished micro-batch, so a transport holding a replay
-    * buffer may trim it down to the uncommitted window — the bound
-    * that keeps a long-lived `fetch()` tail O(in-flight), the role
-    * the reference's cap-1000 channel plays
-    * (`fullamount_service.go:27`). Default no-op: the harness replay
-    * buffers are themselves the source of truth and must keep
-    * serving checkpoint-restart replays.
+  /** Release hook, driven by the stream's `commit(end)`: every
+    * `(uuid, pos)` in `committed` is durably admitted into a finished
+    * micro-batch, so a transport that holds a dump open may release
+    * what it keeps for those transactions. Default no-op.
     */
   def commit(uuid: String, committed: GtidSet): Unit = ()
 }
 
-/** The harness transport: a driver-side replay buffer. */
+/** The harness transport: the whole driver-side replay buffer, every fetch. */
 final class BufferTransport(bufferId: String) extends BinlogTransport {
   override def fetch(): Vector[FeedRow] = GtidReplayBuffers.get(bufferId)
 }
@@ -74,9 +70,6 @@ final class ReconnectingTransport(
 ) extends BinlogTransport {
 
   private var backoffMs = initialBackoffMs
-
-  override def commit(uuid: String, committed: GtidSet): Unit =
-    inner.commit(uuid, committed)
 
   override def fetch(): Vector[FeedRow] = {
     var failures = 0

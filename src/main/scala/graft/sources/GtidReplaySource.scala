@@ -37,19 +37,17 @@ import graft.streaming.FeedRow
   * (1 s → ×2 → 30 s cap, give up after 10 consecutive failures,
   * reset on success).
   *
-  * The event *transport* is a driver-side replay buffer (the test
-  * harness has no MySQL socket): like Spark's own `MemoryStream`, rows
-  * ship to executors inside the serialized [[GtidReplayPartition]].
-  * That is faithful to the real topology — a binlog dump is one
-  * driver-side TCP stream in any engine; scale-out begins after
-  * ingestion, at the shuffle into [[graft.streaming.CdcStream]]
-  * operators. A production implementation implements [[BinlogTransport]]
-  * with the binlog protocol client and keeps every class below
-  * unchanged — and both byte halves of that client already exist
-  * here: [[BinlogWire.comBinlogDumpGtid]] builds the resume request
-  * from the watermark set, [[BinlogDecoder]] decodes the event
-  * stream that comes back; only the TCP connection + auth exchange
-  * remains.
+  * These buffers are the harness's binlog: a driver-side list of rows
+  * that [[BufferTransport]] serves whole on every fetch. Whatever the
+  * transport, the stream itself keeps the one uncommitted window
+  * (rows pulled but not yet covered by a committed offset), and like
+  * Spark's own `MemoryStream` its rows ship to executors inside the
+  * serialized [[GtidReplayPartition]]. That is faithful to the real
+  * topology — a binlog dump is one driver-side TCP stream in any
+  * engine; scale-out begins after ingestion, at the shuffle into
+  * [[graft.streaming.CdcStream]] operators. The production route is
+  * [[SocketTransport]] (auth, `COM_BINLOG_DUMP_GTID` resume, decode)
+  * behind the same [[BinlogTransport]] seam.
   */
 object GtidReplayBuffers {
   private val buffers = TrieMap.empty[String, Vector[FeedRow]]
@@ -167,16 +165,34 @@ final class GtidReplayStream(
     transportFactory: String => BinlogTransport = GtidReplayStream.defaultTransport)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  /** Single-source convenience constructor (spec/back-compat). */
-  def this(bufferId: String, uuid: String, numPartitions: Int, maxRowsPerBatch: Option[Long]) =
-    this(Seq((uuid, bufferId)), numPartitions, maxRowsPerBatch)
-
   /** One (reconnecting) transport per configured source — the analog
     * of the reference's per-holder syncer, with its backoff policy
     * ([[ReconnectingTransport]]) between this stream and the wire.
     */
   private val transports: Seq[(String, BinlogTransport)] =
     sources.map { case (uuid, bufferId) => (uuid, transportFactory(bufferId)) }
+
+  /** Every GTID pulled from the transports so far. */
+  private var seen: GtidSet = GtidSet.empty
+
+  /** Per source uuid, in arrival order: every pulled row that no
+    * committed offset covers yet. This is the only replay buffer
+    * between the wire and the micro-batches, so memory is bounded by
+    * the in-flight range — the role the reference's cap-1000 channel
+    * plays (`fullamount_service.go:27`).
+    */
+  private[sources] var window: Map[String, Vector[FeedRow]] =
+    sources.map { case (uuid, _) => uuid -> Vector.empty[FeedRow] }.toMap
+
+  /** One `fetch()` per source. Rows of an already-seen GTID are
+    * dropped, so a transport that serves its whole buffer again adds
+    * nothing twice.
+    */
+  private def pull(): Unit = transports.foreach { case (uuid, transport) =>
+    val fresh = transport.fetch().filter(r => !seen.contains(uuid, r.pos))
+    window = window.updated(uuid, window(uuid) ++ fresh)
+    seen = fresh.foldLeft(seen)((s, r) => s.add(uuid, r.pos))
+  }
 
   override def initialOffset(): Offset = GtidOffset(GtidSet.empty)
 
@@ -192,12 +208,11 @@ final class GtidReplayStream(
     maxRowsPerBatch.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    pull()
     val from = start.asInstanceOf[GtidOffset].set
-    val pending = transports
-      .flatMap { case (uuid, transport) =>
-        transport.fetch()
-          .filter(r => !from.contains(uuid, r.pos))
-          .map(r => (uuid, r.pos))
+    val pending = window.toSeq
+      .flatMap { case (uuid, rows) =>
+        rows.filter(r => !from.contains(uuid, r.pos)).map(r => (uuid, r.pos))
       }
       .sortBy(identity)
     val admitted = limit match {
@@ -240,14 +255,18 @@ final class GtidReplayStream(
 
   /** Exactly the events in `end − start`: covered by the new offset,
     * not by the old — the per-batch form of "apply only above the
-    * watermark". Each source contributes its own partitions, so one
-    * slow server never serializes another's read.
+    * watermark". The rows come from the window; the wire is dialed
+    * only when the window has never seen all of `end`, which happens
+    * when a restarted query re-plans a batch it logged but did not
+    * commit. Each source contributes its own partitions, so one slow
+    * server never serializes another's read.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GtidOffset].set
     val to = end.asInstanceOf[GtidOffset].set
-    transports.flatMap { case (uuid, transport) =>
-      val rows = transport.fetch()
+    if (!to.subsetOf(seen)) pull()
+    transports.flatMap { case (uuid, _) =>
+      val rows = window(uuid)
         .filter(r => to.contains(uuid, r.pos) && !from.contains(uuid, r.pos))
       if (rows.isEmpty) Iterator.empty
       else rows
@@ -259,19 +278,20 @@ final class GtidReplayStream(
   override def createReaderFactory(): PartitionReaderFactory =
     new GtidReplayReaderFactory
 
-  /** Batch-committed notification → each transport may trim its
-    * replay buffer below the committed set ([[BinlogTransport.commit]]):
-    * once `end` is durable in the checkpoint, no later
-    * `planInputPartitions(start ⊇ end, _)` can ask for those rows
-    * again within this stream instance. (A query RESTART builds fresh
-    * transports and replays from the wire, so trimming here never
-    * loses checkpoint-recovery rows.)
+  /** Batch-committed notification: once `end` is durable in the
+    * checkpoint, no later `planInputPartitions(start ⊇ end, _)` asks
+    * for those rows again within this stream instance, so they leave
+    * the window. (A query RESTART builds a fresh stream that replays
+    * from the wire, so trimming here never loses recovery rows.) Each
+    * transport then hears of the commit through its release hook
+    * ([[BinlogTransport.commit]]).
     */
   override def commit(end: Offset): Unit = {
     val set = end match {
       case g: GtidOffset => g.set
       case other => GtidSet.parse(other.json())
     }
+    window = window.transform((uuid, rows) => rows.filter(r => !set.contains(uuid, r.pos)))
     transports.foreach { case (uuid, t) => t.commit(uuid, set) }
   }
   override def stop(): Unit = ()

@@ -11,9 +11,11 @@ import graft.streaming.FeedRow
   * ([[MysqlAuth]]), a `COM_BINLOG_DUMP_GTID` request built from the
   * transport's own cumulative watermark ([[BinlogWire]]), then the
   * event-stream packets reassembled into one binlog segment and
-  * decoded by [[BinlogDecoder]]. This is the production shape of
-  * `fetch()` the codec stack was built for — the reference re-enters
-  * the same connect → auth → `StartSyncGTID` → consume sequence on
+  * decoded by [[BinlogDecoder]]; `fetch()` returns the rows of that
+  * one connect, which the stream's window keeps until they commit.
+  * This is the production shape of `fetch()` the codec stack was built
+  * for — the reference re-enters the same connect → auth →
+  * `StartSyncGTID` → consume sequence on
   * every reconnect (`/root/reference/internal/cannal/
   * incremental.go:116-177`, bootstrap `internal/syncdb/
   * data_source.go:87-94`). The loopback spec drives it against an
@@ -48,31 +50,6 @@ final class SocketTransport(
     * advances it, so a reconnect re-requests the interrupted tail.
     */
   @volatile private[sources] var watermark: GtidSet = GtidSet.empty
-
-  /** The cumulative decoded tail. The [[BinlogTransport]] seam
-    * contract is "return the source's currently-visible event tail"
-    * — [[GtidReplayStream]] calls `fetch()` once to size an offset
-    * range and again to plan its partitions, filtering by offset
-    * itself, so a transport that returned only the per-connect
-    * SUFFIX would lose every row fetched but not yet admitted. The
-    * wire still carries each transaction once (the dump request
-    * resumes from [[watermark]]); this buffer only replays what
-    * already crossed. [[commit]] trims it below the stream's
-    * committed offset once batches are admitted — the memory bound
-    * is the uncommitted window, same as the reference's cap-1000
-    * channel.
-    */
-  private[sources] var tail: Vector[FeedRow] = Vector.empty
-
-  /** The stream's admission callback: rows whose `(uuid, pos)` the
-    * committed set covers can never be re-planned (every later batch
-    * filters `!from.contains`), so they leave the replay tail. The
-    * wire watermark is untouched — it already only advances on fully
-    * fetched transactions.
-    */
-  override def commit(uuid: String, committed: GtidSet): Unit = synchronized {
-    tail = tail.filter(r => !committed.contains(uuid, r.pos))
-  }
 
   override def fetch(): Vector[FeedRow] = synchronized {
     val socket = new Socket()
@@ -136,8 +113,7 @@ final class SocketTransport(
         case _ => ()
       }
       watermark = wm
-      tail = tail ++ rows
-      tail
+      rows
     } catch {
       case e: TransportException => throw e
       case e: IOException =>

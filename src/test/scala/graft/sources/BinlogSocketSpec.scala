@@ -83,22 +83,21 @@ class BinlogSocketSpec extends AnyFunSuite {
       assert(wire1 == 1 + 4L * first.length, "FDE + 4 events per transaction")
       // the resume protocol over the wire: everything fetched is
       // covered by the transport's watermark, so a re-fetch's dump
-      // request makes the server skip every transaction — the seam
-      // contract still returns the cumulative visible tail, but the
-      // WIRE carries only the FDE
-      assert(t.fetch() == first, "fetch returns the cumulative visible tail")
+      // request makes the server skip every transaction — the fetch
+      // returns nothing and the WIRE carries only the FDE
+      assert(t.fetch() == Vector.empty, "a covered re-fetch returns no rows")
       assert(server.eventPacketsServed.get() == wire1 + 1,
         "zero transactions may recross the wire for a covered set")
       // the binlog GROWS: only the new transactions ride the wire
       server.archive = encodeArchive(feed)
       val got2 = t.fetch()
-      assert(got2 == feed, "the grown tail is first ++ rest, in order")
+      assert(got2 == rest, "a fetch returns only the new transactions, in order")
       assert(server.eventPacketsServed.get() == wire1 + 2 + 4L * rest.length,
         "only the new transactions are served")
       assert(t.watermark.serialize == s"$U:${feed.map(_.pos).min}-${feed.map(_.pos).max}",
         "watermark compresses the fetched GTIDs to one interval")
       // the capstone equality: socket-transported state == direct state
-      assert(stateOf(got2, "wire") == stateOf(feed, "direct"),
+      assert(stateOf(got1 ++ got2, "wire") == stateOf(feed, "direct"),
         "materialized state must be identical through the wire")
     } finally server.stop()
   }
@@ -148,10 +147,11 @@ class BinlogSocketSpec extends AnyFunSuite {
       }
       assert(rows.sortBy(_.pos) == feed, "every transaction arrives exactly once")
       assert(batches == 3, s"60 single-row txs under a 25-row cap = 3 batches, got $batches")
-      // the wire carried each transaction ONCE plus one FDE per connect
+      // the wire carried each transaction ONCE plus one FDE per connect,
+      // and only latestOffset connects: 3 batches + the empty poll
       val connects = server.eventPacketsServed.get() - 4L * feed.length
-      assert(connects >= 1 && connects <= 8,
-        s"transactions must not recross the wire (FDE-only connects: $connects)")
+      assert(connects == 4,
+        s"one connect per latestOffset, none per plan (FDE-only connects: $connects)")
     } finally server.stop()
   }
 
@@ -196,32 +196,6 @@ class BinlogSocketSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
-  test("commit trims the replay tail to the uncommitted window") {
-    import graft.model.GtidSet
-    val feed = feedRows().take(20)
-    val (first, rest) = feed.splitAt(12)
-    val server = new LoopbackBinlogServer(
-      "repl", MysqlAuth.storedHash("s3cret"), encodeArchive(first))
-    try {
-      val t = new SocketTransport("127.0.0.1", server.port, "repl", "s3cret")
-      assert(t.fetch() == first)
-      assert(t.tail.length == first.length)
-      // the stream admits + checkpoints everything fetched so far,
-      // then notifies the transport (GtidReplayStream.commit → here)
-      val committed = first.foldLeft(GtidSet.empty)((s, r) => s.add(U, r.pos))
-      t.commit(U, committed)
-      assert(t.tail.isEmpty, "committed rows leave the replay buffer")
-      // the binlog grows: fetch now returns ONLY the uncommitted
-      // window — the long-lived-query memory bound — and the wire
-      // still carries each new transaction exactly once
-      server.archive = encodeArchive(feed)
-      assert(t.fetch() == rest, "fetch = the uncommitted window only")
-      // a commit for a different server's uuid trims nothing
-      t.commit("00000000-0000-0000-0000-000000000000", committed)
-      assert(t.fetch() == rest)
-    } finally server.stop()
-  }
-
   test("inter-transaction events (trailing ROTATE) still cross the wire") {
     val feed = feedRows().take(6)
     val server = new LoopbackBinlogServer(
@@ -232,9 +206,9 @@ class BinlogSocketSpec extends AnyFunSuite {
       assert(t.fetch() == feed, "rows are unaffected by the rotate marker")
       assert(server.eventPacketsServed.get() == 1 + 4L * feed.length + 1,
         "FDE + 4 events per tx + the trailing ROTATE — not silently dropped")
-      // with every transaction covered, a re-fetch's wire carries only
-      // the ungated events: the FDE and the rotate marker
-      assert(t.fetch() == feed)
+      // with every transaction covered, a re-fetch returns no rows and
+      // its wire carries only the ungated events: the FDE and the rotate
+      assert(t.fetch() == Vector.empty)
       assert(server.eventPacketsServed.get() == 2 + 4L * feed.length + 2,
         "covered transactions skip; ungated events still serve")
     } finally server.stop()
@@ -333,7 +307,9 @@ class BinlogSocketSpec extends AnyFunSuite {
         readTimeoutMs = 3000)
       val t0 = System.nanoTime()
       assert(t.fetch() == feed)
-      assert(t.fetch() == feed, "a covered re-fetch ends at the tip too")
+      assert(t.fetch() == Vector.empty, "a covered re-fetch ends at the tip too")
+      assert(server.eventPacketsServed.get() == 2 + 4L * feed.length,
+        "the covered re-fetch's wire carries only the FDE")
       assert((System.nanoTime() - t0) / 1000000 < 3000,
         "both fetches must end on EOF, well inside one read timeout")
     } finally server.stop()

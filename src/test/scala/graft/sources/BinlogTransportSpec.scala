@@ -2,8 +2,10 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.GtidSet
 import graft.streaming.FeedRow
 
 /** The reference's reconnect/backoff policy
@@ -460,18 +462,97 @@ class BinlogTransportSpec extends AnyFunSuite {
       3L -> (2L, "insert", 3.0))) // pk=1 deleted; pk=9 never committed
   }
 
-  test("binlog buffer transport: commit trims the decoded tail, a fresh transport replays all") {
-    val id = BinlogBuffers.register(segment1(), segment2)
-    var transport: BinlogTransport = null
+  // ---- the stream's uncommitted window --------------------------------------
+
+  /** Serves `rows` whole on every fetch and counts the fetches. */
+  private final class CountingTransport(rows: Vector[FeedRow]) extends BinlogTransport {
+    var calls = 0
+    override def fetch(): Vector[FeedRow] = { calls += 1; rows }
+  }
+
+  private def offset(gnos: Range): GtidOffset =
+    GtidOffset(gnos.foldLeft(GtidSet.empty)((s, g) => s.add("srv-1", g.toLong)))
+
+  private def planned(stream: GtidReplayStream, start: GtidOffset, end: GtidOffset) =
+    stream.planInputPartitions(start, end).toVector
+      .flatMap(_.asInstanceOf[GtidReplayPartition].rows)
+
+  test("window: re-planning one batch fetches nothing more") {
+    val counting = new CountingTransport((1L to 10L).map(row).toVector)
     val stream = new GtidReplayStream(
-      Seq((U, s"binlog:$id")), numPartitions = 2, maxRowsPerBatch = Some(2),
-      transportFactory = b => { transport = GtidReplayStream.defaultTransport(b); transport })
-    val all = transport.fetch().map(_.pos)
-    assert(all.distinct == Vector(1L, 2L, 3L, 4L)) // tx 5 never committed
-    // the cap admits tx 1 (two rows) alone
-    val end = stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit)
-    stream.commit(end)
-    assert(transport.fetch().map(_.pos) == all.filter(_ > 1L))
-    assert(GtidReplayStream.defaultTransport(s"binlog:$id").fetch().map(_.pos) == all)
+      Seq(("srv-1", "unused")), numPartitions = 2, maxRowsPerBatch = Some(4),
+      transportFactory = _ => counting)
+    val start = stream.initialOffset().asInstanceOf[GtidOffset]
+    val end = stream.latestOffset(start, stream.getDefaultReadLimit).asInstanceOf[GtidOffset]
+    assert(counting.calls == 1)
+    val plans = Vector.fill(3)(planned(stream, start, end))
+    assert(counting.calls == 1, "planning a range the window covers never fetches")
+    assert(plans.distinct.length == 1)
+    assert(plans.head.map(_.pos) == Vector(1L, 2L, 3L, 4L))
+  }
+
+  test("window: a restarted query's re-plan fetches once, returns end − start") {
+    val counting = new CountingTransport((1L to 10L).map(row).toVector)
+    val stream = new GtidReplayStream(
+      Seq(("srv-1", "unused")), numPartitions = 2, transportFactory = _ => counting)
+    assert(planned(stream, offset(1 to 3), offset(1 to 7)).map(_.pos) ==
+      Vector(4L, 5L, 6L, 7L))
+    assert(counting.calls == 1)
+  }
+
+  test("window: commit trims it on the binlog: and socket: routes") {
+    // both routes serve segment 1 (tx 1: two rows, tx 2: one row); a
+    // 2-row cap admits tx 1 alone
+    def check(route: String): Unit = {
+      var transport: BinlogTransport = null
+      val stream = new GtidReplayStream(
+        Seq((U, route)), numPartitions = 2, maxRowsPerBatch = Some(2),
+        transportFactory = b => { transport = GtidReplayStream.defaultTransport(b); transport })
+      val end = stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit)
+      assert(stream.window(U).map(_.pos) == Vector(1L, 1L, 2L), route)
+      // another server's GTIDs trim nothing
+      stream.commit(GtidOffset(GtidSet.empty.add("other-uuid", 1).add("other-uuid", 2)))
+      assert(stream.window(U).map(_.pos) == Vector(1L, 1L, 2L), route)
+      stream.commit(end)
+      assert(stream.window(U).map(_.pos) == Vector(2L), s"$route: only rows above end stay")
+      assert(transport.fetch().isEmpty, s"$route: the transport keeps no window of its own")
+      // a fresh stream (a query restart) replays from the first segment
+      val fresh = new GtidReplayStream(Seq((U, route)), numPartitions = 2)
+      val start = fresh.initialOffset().asInstanceOf[GtidOffset]
+      val all = fresh.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[GtidOffset]
+      assert(planned(fresh, start, all).map(_.pos) == Vector(1L, 1L, 2L), route)
+    }
+    check(s"binlog:${BinlogBuffers.register(segment1())}")
+    val server = new LoopbackBinlogServer("repl", MysqlAuth.storedHash("s3cret"), segment1())
+    try check(s"socket:127.0.0.1:${server.port}:repl:s3cret") finally server.stop()
+  }
+
+  test("window: transports that repeat transactions still deliver each row once") {
+    val rows = Vector(row(1), row(1), row(2), row(3), row(3), row(3), row(4))
+    val more = Vector(row(5), row(5), row(6))
+    /** Runs batches of at most 2 rows to the end, committing each;
+      * `grow` runs before the third. */
+    def drain(id: String, factory: String => BinlogTransport, grow: () => Unit) = {
+      val stream = new GtidReplayStream(
+        Seq(("srv-1", id)), numPartitions = 2, maxRowsPerBatch = Some(2),
+        transportFactory = factory)
+      var off = stream.initialOffset().asInstanceOf[GtidOffset]
+      var delivered = Vector.empty[FeedRow]
+      (0 until 20).foreach { batch =>
+        if (batch == 2) grow()
+        val next = stream.latestOffset(off, stream.getDefaultReadLimit).asInstanceOf[GtidOffset]
+        delivered ++= planned(stream, off, next)
+        stream.commit(next)
+        off = next
+      }
+      delivered
+    }
+    // BufferTransport serves the whole (growing) buffer on every fetch
+    val id = GtidReplayBuffers.register(rows)
+    assert(drain(id, GtidReplayStream.defaultTransport,
+      () => GtidReplayBuffers.append(id, more)) == rows ++ more)
+    val flaky = new FlakyTransport(2, rows ++ more)
+    assert(drain("unused", _ => new ReconnectingTransport(flaky, sleep = _ => ()),
+      () => ()) == rows ++ more)
   }
 }
