@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -193,6 +194,35 @@ class BinlogSocketSpec extends AnyFunSuite {
         assert(delivered.synchronized(delivered.toSet) == rest.map(_.pos).toSet,
           "resume must deliver exactly the transactions above the checkpoint")
       } finally q2.stop()
+    } finally server.stop()
+  }
+
+  test("commit trims the replay tail to the uncommitted window") {
+    import graft.model.GtidSet
+    val feed = feedRows().take(20)
+    val (first, rest) = feed.splitAt(12)
+    val server = new LoopbackBinlogServer(
+      "repl", MysqlAuth.storedHash("s3cret"), encodeArchive(first))
+    try {
+      // the replay tail is the stream's window: SocketTransport keeps none
+      val stream = new GtidReplayStream(
+        Seq((U, s"socket:127.0.0.1:${server.port}:repl:s3cret")), numPartitions = 2)
+      val end = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+      assert(stream.window(U) == first)
+      // a commit for a different server's uuid trims nothing
+      stream.commit(GtidOffset(first.foldLeft(GtidSet.empty)(
+        (s, r) => s.add("00000000-0000-0000-0000-000000000000", r.pos))))
+      assert(stream.window(U) == first)
+      stream.commit(end)
+      assert(stream.window(U).isEmpty, "committed rows leave the replay window")
+      // the binlog grows: the window now holds ONLY the uncommitted
+      // rows — the long-lived-query memory bound — and the wire still
+      // carries each new transaction exactly once
+      server.archive = encodeArchive(feed)
+      stream.latestOffset(end, ReadLimit.allAvailable())
+      assert(stream.window(U) == rest, "window = the uncommitted rows only")
+      assert(server.eventPacketsServed.get() == 2 + 4L * feed.length,
+        "one FDE per connect + 4 events per tx, each tx served once")
     } finally server.stop()
   }
 

@@ -500,31 +500,28 @@ class BinlogTransportSpec extends AnyFunSuite {
     assert(counting.calls == 1)
   }
 
-  test("window: commit trims it on the binlog: and socket: routes") {
-    // both routes serve segment 1 (tx 1: two rows, tx 2: one row); a
-    // 2-row cap admits tx 1 alone
-    def check(route: String): Unit = {
-      var transport: BinlogTransport = null
-      val stream = new GtidReplayStream(
-        Seq((U, route)), numPartitions = 2, maxRowsPerBatch = Some(2),
-        transportFactory = b => { transport = GtidReplayStream.defaultTransport(b); transport })
-      val end = stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit)
-      assert(stream.window(U).map(_.pos) == Vector(1L, 1L, 2L), route)
-      // another server's GTIDs trim nothing
-      stream.commit(GtidOffset(GtidSet.empty.add("other-uuid", 1).add("other-uuid", 2)))
-      assert(stream.window(U).map(_.pos) == Vector(1L, 1L, 2L), route)
-      stream.commit(end)
-      assert(stream.window(U).map(_.pos) == Vector(2L), s"$route: only rows above end stay")
-      assert(transport.fetch().isEmpty, s"$route: the transport keeps no window of its own")
-      // a fresh stream (a query restart) replays from the first segment
-      val fresh = new GtidReplayStream(Seq((U, route)), numPartitions = 2)
-      val start = fresh.initialOffset().asInstanceOf[GtidOffset]
-      val all = fresh.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[GtidOffset]
-      assert(planned(fresh, start, all).map(_.pos) == Vector(1L, 1L, 2L), route)
-    }
-    check(s"binlog:${BinlogBuffers.register(segment1())}")
-    val server = new LoopbackBinlogServer("repl", MysqlAuth.storedHash("s3cret"), segment1())
-    try check(s"socket:127.0.0.1:${server.port}:repl:s3cret") finally server.stop()
+  test("binlog buffer transport: commit trims the decoded tail, a fresh transport replays all") {
+    // the decoded tail is the stream's window: the transport keeps none
+    val id = BinlogBuffers.register(segment1(), segment2)
+    var transport: BinlogTransport = null
+    val stream = new GtidReplayStream(
+      Seq((U, s"binlog:$id")), numPartitions = 2, maxRowsPerBatch = Some(2),
+      transportFactory = b => { transport = GtidReplayStream.defaultTransport(b); transport })
+    // the cap admits tx 1 (two rows) alone
+    val end = stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit)
+    val all = stream.window(U).map(_.pos)
+    assert(all.distinct == Vector(1L, 2L, 3L, 4L)) // tx 5 never committed
+    // another server's GTIDs trim nothing
+    stream.commit(GtidOffset(GtidSet.empty.add("other-uuid", 1).add("other-uuid", 2)))
+    assert(stream.window(U).map(_.pos) == all)
+    stream.commit(end)
+    assert(stream.window(U).map(_.pos) == all.filter(_ > 1L), "only rows above end stay")
+    assert(transport.fetch().isEmpty, "the transport keeps no decoded tail of its own")
+    // a fresh stream (a query restart) replays from the first segment
+    val fresh = new GtidReplayStream(Seq((U, s"binlog:$id")), numPartitions = 2)
+    val start = fresh.initialOffset().asInstanceOf[GtidOffset]
+    val replayed = fresh.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[GtidOffset]
+    assert(planned(fresh, start, replayed).map(_.pos) == all)
   }
 
   test("window: transports that repeat transactions still deliver each row once") {
