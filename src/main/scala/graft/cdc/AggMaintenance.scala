@@ -1,7 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Incremental view maintenance for aggregates over the CDC feed —
   * the serving-layer half of a CDC warehouse: keep a rollup of the
@@ -31,10 +31,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * would turn into a hash mismatch; decimal addition is associative.
   *
   * Scale: the delta computation is one narrow projection over the
-  * batch; the rollup table has one row per group (cohorts here —
-  * thousands at most in practice), so the merge-overwrite is
-  * control-plane-sized. A rollup keyed fine enough to be data-sized
-  * would use the bucketed COW layout of [[CdcPipeline]] instead.
+  * batch. Every rollup is a hash-bucketed table committed through its
+  * manifest ([[MetaTables.write]]); a flat rollup (one row per cohort —
+  * thousands at most in practice) is the one-bucket case, and a rollup
+  * keyed fine enough to be data-sized spreads over more buckets
+  * ([[applyMovingDeltaBucketed]]).
+  *
+  * Crash contract: a merge commits by one manifest rename, so a crash
+  * leaves the previous rollup readable and unchanged, and redelivering
+  * the batch then yields the rollup that batch would have made. But
+  * the rollup keeps no GTID gate: a batch delivered again AFTER its
+  * merge committed adds its deltas a second time. Redelivery is safe
+  * only for a batch whose merge did not commit.
   */
 object AggMaintenance {
 
@@ -59,15 +67,21 @@ object AggMaintenance {
     else base
   }
 
+  /** One image's (exists, contrib) terms: 1 and its decimal value when
+    * the image is a live row, else 0 and 0. `p` picks the after ("")
+    * or before ("prev_") image; a first event's null `prev_op` is no
+    * live row.
+    */
+  private def image(p: String): (Column, Column) = {
+    val live = col(s"${p}op").isNotNull && col(s"${p}op") =!= "delete"
+    (when(live, 1L).otherwise(0L),
+      when(live, col(s"${p}value").cast("decimal(18,4)"))
+        .otherwise(lit(0).cast("decimal(18,4)")))
+  }
+
   /** Per-event rollup deltas (decimal-exact). */
   def deltas(imaged: DataFrame): DataFrame = {
-    val contribAfter = when(col("op") =!= "delete",
-      col("value").cast("decimal(18,4)")).otherwise(lit(0).cast("decimal(18,4)"))
-    val contribBefore = when(col("prev_op").isNotNull && col("prev_op") =!= "delete",
-      col("prev_value").cast("decimal(18,4)")).otherwise(lit(0).cast("decimal(18,4)"))
-    val existsAfter = when(col("op") =!= "delete", 1L).otherwise(0L)
-    val existsBefore = when(col("prev_op").isNotNull && col("prev_op") =!= "delete", 1L)
-      .otherwise(0L)
+    val ((existsAfter, contribAfter), (existsBefore, contribBefore)) = (image(""), image("prev_"))
     imaged.select(
       cohortCol,
       (existsAfter - existsBefore).as("d_n"),
@@ -88,15 +102,8 @@ object AggMaintenance {
     * `groupOf(prefix)` renders the group key from the `after` ("")
     * or `before` ("prev_") image columns.
     */
-  def movingDeltas(imaged: DataFrame, groupOf: String => org.apache.spark.sql.Column)
-      : DataFrame = {
-    val contribAfter = when(col("op") =!= "delete",
-      col("value").cast("decimal(18,4)")).otherwise(lit(0).cast("decimal(18,4)"))
-    val contribBefore = when(col("prev_op").isNotNull && col("prev_op") =!= "delete",
-      col("prev_value").cast("decimal(18,4)")).otherwise(lit(0).cast("decimal(18,4)"))
-    val existsAfter = when(col("op") =!= "delete", 1L).otherwise(0L)
-    val existsBefore = when(col("prev_op").isNotNull && col("prev_op") =!= "delete", 1L)
-      .otherwise(0L)
+  def movingDeltas(imaged: DataFrame, groupOf: String => Column): DataFrame = {
+    val ((existsAfter, contribAfter), (existsBefore, contribBefore)) = (image(""), image("prev_"))
     val add = imaged.select(groupOf("").as("grp"),
       existsAfter.as("d_n"), contribAfter.as("d_sum"))
     val retract = imaged.select(groupOf("prev_").as("grp"),
@@ -104,71 +111,49 @@ object AggMaintenance {
     add.unionByName(retract).filter(col("grp").isNotNull)
   }
 
-  /** Merge one batch's deltas into the rollup table (read-modify-
-    * overwrite — the rollup is one row per cohort).
-    */
+  /** Merge one batch's deltas into the flat (one-bucket) rollup. */
   def applyDelta(spark: SparkSession, rollupDir: String, batchImaged: DataFrame): Unit =
-    mergeDeltaRows(spark, rollupDir,
-      deltas(batchImaged).withColumnRenamed("cohort", "grp"), keyName = "cohort")
+    merge(spark, rollupDir,
+      deltas(batchImaged).withColumnRenamed("cohort", "grp"), keyName = "cohort", nBuckets = 1)
 
   /** [[movingDeltas]] variant of [[applyDelta]]: one batch of
-    * group-moving deltas merged into the rollup under `keyName`.
+    * group-moving deltas merged into the flat rollup under `keyName`.
     */
   def applyMovingDelta(
       spark: SparkSession, rollupDir: String, batchImaged: DataFrame,
-      groupOf: String => org.apache.spark.sql.Column, keyName: String): Unit =
-    mergeDeltaRows(spark, rollupDir, movingDeltas(batchImaged, groupOf), keyName)
+      groupOf: String => Column, keyName: String): Unit =
+    merge(spark, rollupDir, movingDeltas(batchImaged, groupOf), keyName, nBuckets = 1)
 
-  /** Shared merge: aggregate (grp, d_n, d_sum) delta rows, add to the
-    * existing rollup, drop zeroed groups, overwrite.
-    */
-  private def mergeDeltaRows(
-      spark: SparkSession, rollupDir: String, deltaRows: DataFrame,
-      keyName: String): Unit = {
-    val d = deltaRows
-      .groupBy(col("grp").as(keyName))
-      .agg(sum(col("d_n")).as("n_rows"), sum(col("d_sum")).as("sum_value"))
-    val merged = MetaTables.readIfExists(spark, rollupDir) match {
-      case None => d
-      case Some(existing) =>
-        existing.select(col(keyName), col("n_rows"), col("sum_value"))
-          .unionByName(d)
-          .groupBy(keyName)
-          .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_value")).as("sum_value"))
-    }
-    // pin the sum's decimal type so repeated merge cycles don't widen
-    // precision round-trip over parquet (sum(decimal) grows precision)
-    val out = merged
-      .select(col(keyName), col("n_rows"),
-        col("sum_value").cast("decimal(28,4)").as("sum_value"))
-      .filter(col("n_rows") =!= 0 || col("sum_value") =!= 0)
-      .localCheckpoint(true)
-    out.coalesce(1).write.mode("overwrite").parquet(rollupDir)
-  }
-
-  /** [[applyMovingDelta]] against a BUCKETED rollup layout — for
+  /** [[applyMovingDelta]] against a rollup spread over `nBuckets` — for
     * rollups whose group key is data-sized (per-window, per-entity)
-    * rather than a handful of cohorts. The rollup parquet is
-    * hash-partitioned on `pmod(hash(grp), nBuckets)` exactly like the
-    * [[CdcPipeline]] state table, and one apply:
+    * rather than a handful of cohorts.
+    */
+  def applyMovingDeltaBucketed(
+      spark: SparkSession, rollupDir: String, batchImaged: DataFrame,
+      groupOf: String => Column, keyName: String,
+      nBuckets: Int = 16): Unit =
+    merge(spark, rollupDir, movingDeltas(batchImaged, groupOf), keyName, nBuckets)
+
+  /** The one rollup merge. The rollup parquet is hash-partitioned on
+    * `pmod(hash(grp), nBuckets)` exactly like the [[CdcPipeline]]
+    * state table, and one apply:
     *
-    *   1. aggregates the batch's deltas (O(batch), map-side partial);
+    *   1. aggregates the batch's (grp, d_n, d_sum) delta rows
+    *      (O(batch), map-side partial);
     *   2. collects the touched bucket ids (≤ nBuckets — control
     *      plane);
     *   3. reads ONLY the touched buckets' files of the existing rollup,
     *      merges, and commits new files for those buckets through the
     *      rollup's manifest ([[MetaTables.write]]).
     *
-    * Per-batch cost is O(batch + touched-bucket rollup) ON DISK TOO —
-    * the property the flat layout loses once the rollup outgrows a
-    * single overwrite. A bucket whose every group zeroes out keeps no
-    * file (same emptied-bucket rule as the state sink).
+    * Per-batch cost is O(batch + touched-bucket rollup) ON DISK TOO. A
+    * bucket whose every group zeroes out keeps no file (same
+    * emptied-bucket rule as the state sink).
     */
-  def applyMovingDeltaBucketed(
-      spark: SparkSession, rollupDir: String, batchImaged: DataFrame,
-      groupOf: String => org.apache.spark.sql.Column, keyName: String,
-      nBuckets: Int = 16): Unit = {
-    val d = movingDeltas(batchImaged, groupOf)
+  private def merge(
+      spark: SparkSession, rollupDir: String, deltaRows: DataFrame,
+      keyName: String, nBuckets: Int): Unit = {
+    val d = deltaRows
       .groupBy(col("grp").as(keyName))
       .agg(sum(col("d_n")).as("n_rows"), sum(col("d_sum")).as("sum_value"))
       .withColumn("rbucket", pmod(hash(col(keyName)), lit(nBuckets)))
@@ -186,6 +171,8 @@ object AggMaintenance {
           .groupBy(col(keyName), col("rbucket"))
           .agg(sum(col("n_rows")).as("n_rows"), sum(col("sum_value")).as("sum_value"))
     }
+    // pin the sum's decimal type so repeated merge cycles don't widen
+    // precision round-trip over parquet (sum(decimal) grows precision)
     val out = merged
       .select(col(keyName), col("n_rows"),
         col("sum_value").cast("decimal(28,4)").as("sum_value"), col("rbucket"))
@@ -199,11 +186,9 @@ object AggMaintenance {
     * count, decimal-exact sum surfaced as double.
     */
   def read(spark: SparkSession, rollupDir: String, keyName: String = "cohort"): DataFrame =
-    MetaTables.readLog(rollupDir) // a bucketed rollup reads the files its manifest names
-      .map(log => MetaTables.read(spark, rollupDir, log, log.files))
-      .orElse(MetaTables.readIfExists(spark, rollupDir)) match {
+    MetaTables.readLog(rollupDir) match {
       case None => spark.emptyDataFrame
-      case Some(df) => df.select(
+      case Some(log) => MetaTables.read(spark, rollupDir, log, log.files).select(
         col(keyName),
         col("n_rows"),
         col("sum_value").cast("double").as("sum_value"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 
 import graft.functions.GtidAccum
-import graft.model.{GtidSet, GtidRange}
+import graft.model.GtidSet
 
 /** The wired incremental ("增量") pipeline — the running-stream form
   * of the reference's binlog event loop
@@ -518,29 +518,23 @@ object CdcPipeline {
     * (`fullamount_service.go:72-110` — all tables in one pass, meta
     * saved only at the end) restarts from zero on any failure. Here
     * the table splits into `numChunks` contiguous PK ranges (the
-    * chunked-scan shape of [[SnapshotJob.chunked]], re-derived
-    * deterministically from the pinned snapshot read's min/max, so a
-    * restarted driver computes the SAME chunks), and completion is
-    * tracked per chunk in the watermark store — as a GTID set over a
-    * synthetic `chunks` uuid, so finished chunk ids compress to
-    * intervals (`chunks:0-41`) and resume is one `contains` per chunk,
-    * the exact machinery the incremental gate already uses.
+    * chunked-scan shape of [[SnapshotJob.chunked]]), whose bounds the
+    * first run pins in the state table's manifest ([[ChunkBounds]]) so
+    * a restarted driver computes the SAME chunks.
     *
-    * Each chunk appends its bucketed rows, then records its id; the
-    * crash window between those two writes re-appends that chunk on
-    * resume, and the duplicate rows collapse in the latest-wins read —
-    * the same at-least-once contract as [[applyBatch]] redelivery
-    * (chunks are PK-disjoint, so cross-chunk appends never conflict).
-    * The TABLE watermark `pos` is pinned only after every chunk is
-    * covered: a half-done snapshot can never admit incremental events.
+    * Each chunk's write commits its files and its chunk id in one
+    * manifest rename, so a chunk is committed whole or not at all: a
+    * crash anywhere in a chunk leaves only unnamed files, which the
+    * next write sweeps, and a resume runs exactly the chunks the
+    * manifest does not name as done. The TABLE watermark `pos` is
+    * pinned only after every chunk is committed: a half-done snapshot
+    * can never admit incremental events.
     *
     * `failAfterChunks` is the crash-injection seam (spec + gate): the
-    * run completes (writes AND records) that many chunks, then writes
-    * the NEXT chunk's data and throws before its completion upsert —
-    * leaving exactly one written-but-unrecorded chunk, the worst-case
-    * at-least-once window.
+    * run commits that many chunks, then throws before the next chunk's
+    * write.
     *
-    * Returns the chunk ids this run completed.
+    * Returns the chunk ids this run committed.
     */
   def resumableSnapshot(
       spark: SparkSession,
@@ -555,8 +549,6 @@ object CdcPipeline {
       table: String = "events"
   ): Seq[Int] = {
     require(numChunks > 0, "numChunks must be positive")
-    val chunksTable = s"$table#chunks"
-    val schemaName = SnapshotJob.schemaName
     val prev = MetaTables.readLog(stateDir)
     // a fresh table's manifest: written before the first chunk (with
     // the pinned bounds), or alone for an empty snapshot — a completed
@@ -566,69 +558,53 @@ object CdcPipeline {
       snapshotFeed.withColumn(bucketCol, bucketOf(stateBuckets)).schema, bucketCol, stateBuckets))
     val pinned = log.chunks.find(_.table == table)
     val mm = snapshotFeed.agg(min(col(chunkBy)), max(col(chunkBy))).head()
-    if (mm.isNullAt(0)) { // empty table: a complete (empty) snapshot
-      // …unless a prior non-empty run already pinned chunk bounds: a
-      // feed that drifted to EMPTY mid-resume is the same
-      // unpinned-feed contract violation as drifted min/max, and the
-      // empty-complete path would otherwise mark every chunk covered
-      // and pin the table watermark — silently losing the rows the
-      // unfinished chunks never wrote
-      pinned.foreach { c =>
-        throw new IllegalStateException(
-          s"resumableSnapshot chunk bounds drifted on resume: pinned " +
-            s"[${c.lo},${c.hi}]/${c.numChunks} chunks vs an EMPTY recomputed feed — " +
-            "snapshotFeed must be a pinned (immutable) read")
-      }
-      if (prev.isEmpty) MetaTables.commit(stateDir, None, log)
-      store.upsert(spark, Seq(
-        TableWatermark(source, schemaName, chunksTable,
-          GtidSet.empty.addRange("chunks", GtidRange(0, numChunks - 1)).serialize),
-        TableWatermark(source, schemaName, table, pos)))
-      return Seq.empty
-    }
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val range = if (mm.isNullAt(0)) None else Some((mm.getLong(0), mm.getLong(1)))
     // Pin the chunk geometry on first run and ENFORCE it on resume:
     // "re-derived deterministically from the pinned read" is a caller
     // contract, not a given — a live (unpinned) feed would recompute
-    // different bounds while chunk ids are already marked covered,
-    // silently missing or duplicating rows. Persisting (lo, hi,
-    // numChunks) makes the contract checkable: a drifted resume fails
-    // loudly instead.
-    pinned match {
-      case Some(c) =>
-        if (c.lo != lo || c.hi != hi || c.numChunks != numChunks)
-          throw new IllegalStateException(
-            s"resumableSnapshot chunk bounds drifted on resume: pinned " +
-              s"[${c.lo},${c.hi}]/${c.numChunks} chunks vs recomputed [$lo,$hi]/$numChunks — " +
-              "snapshotFeed must be a pinned (immutable) read")
-      case None =>
-        MetaTables.commit(stateDir, prev,
-          log.copy(chunks = log.chunks :+ ChunkBounds(table, lo, hi, numChunks)))
-    }
-    val width = math.max(1L, (hi - lo) / numChunks + 1)
-    val done = store.watermark(spark, source, schemaName, chunksTable)
-    val pending = (0 until numChunks).filterNot(k => done.contains("chunks", k.toLong))
-    val completed = Seq.newBuilder[Int]
-    var written = 0
-    pending.foreach { k =>
-      val (cLo, cHi) = (lo + k * width, lo + (k + 1) * width - 1)
-      val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
-      val cur = logOf(stateDir)
-      MetaTables.write(stateDir, Some(cur),
-        byBucket(chunk.withColumn(bucketCol, bucketOf(cur.buckets)), cur.buckets), cur, _ => false)
-      maybeSplit(spark, stateDir)
-      written += 1
-      if (written > failAfterChunks)
+    // different bounds (or none, once EMPTY) while chunk ids are
+    // already marked done, silently missing or duplicating rows, and
+    // an empty feed would pin the table watermark over the chunks never
+    // written. Persisting (lo, hi, numChunks) makes the contract
+    // checkable: a drifted resume fails loudly instead.
+    pinned.foreach { c =>
+      if (!range.contains((c.lo, c.hi)) || c.numChunks != numChunks)
         throw new IllegalStateException(
-          s"injected crash: chunk $k written but not recorded")
-      store.upsert(spark, Seq(TableWatermark(source, schemaName, chunksTable,
-        GtidSet.empty.add("chunks", k.toLong).serialize)))
-      completed += k
+          s"resumableSnapshot chunk bounds drifted on resume: pinned " +
+            s"[${c.lo},${c.hi}]/${c.numChunks} chunks vs " +
+            range.fold("an EMPTY recomputed feed") { case (lo, hi) =>
+              s"recomputed [$lo,$hi]/$numChunks" } +
+            " — snapshotFeed must be a pinned (immutable) read")
     }
-    val covered = store.watermark(spark, source, schemaName, chunksTable)
-    if ((0 until numChunks).forall(k => covered.contains("chunks", k.toLong)))
-      store.upsert(spark, Seq(TableWatermark(source, schemaName, table, pos)))
-    completed.result()
+    val committed = range match {
+      case None => // empty table: a complete (empty) snapshot
+        if (prev.isEmpty) MetaTables.commit(stateDir, None, log)
+        Seq.empty
+      case Some((lo, hi)) =>
+        val bounds = pinned.getOrElse {
+          val c = ChunkBounds(table, lo, hi, numChunks, Seq.empty)
+          MetaTables.commit(stateDir, prev, log.copy(chunks = log.chunks :+ c))
+          c
+        }
+        val width = math.max(1L, (hi - lo) / numChunks + 1)
+        val pending = (0 until numChunks).filterNot(bounds.done.contains)
+        pending.zipWithIndex.foreach { case (k, i) =>
+          if (i == failAfterChunks)
+            throw new IllegalStateException(s"injected crash before chunk $k")
+          val (cLo, cHi) = (lo + k * width, lo + (k + 1) * width - 1)
+          val chunk = snapshotFeed.filter(col(chunkBy) >= cLo && col(chunkBy) <= cHi)
+          val cur = logOf(stateDir)
+          val next = cur.copy(chunks = cur.chunks.map(c =>
+            if (c.table == table) c.copy(done = c.done :+ k) else c))
+          MetaTables.write(stateDir, Some(cur),
+            byBucket(chunk.withColumn(bucketCol, bucketOf(cur.buckets)), cur.buckets), next,
+            _ => false)
+          maybeSplit(spark, stateDir)
+        }
+        pending
+    }
+    store.upsert(spark, Seq(TableWatermark(source, SnapshotJob.schemaName, table, pos)))
+    committed
   }
 
   /** Union schema for additive evolution: existing field order first

@@ -205,18 +205,15 @@ object CdcQueries {
   /** The snapshot protocol made restartable
     * ([[CdcPipeline.resumableSnapshot]]): at 100 TB the bootstrap scan
     * runs for days, and the reference's one-shot flow loses everything
-    * on a crash. The gate runs the WORST-CASE schedule: snapshot the
-    * `customer` table in 8 PK-range chunks with an injected crash
-    * after chunk 3's data lands but before its completion record —
-    * the at-least-once window — then resumes (which must re-append
-    * exactly that chunk and finish the rest), then runs a third time
-    * (which must be a covered no-op). The materialized state must
-    * equal a direct read of the table: any chunk lost, skipped, or
-    * double-counted by the resume logic breaks the hash; the
-    * re-appended chunk's duplicates must collapse in the latest-wins
-    * read. Chunk completion rides the watermark store as a GTID set
-    * over a synthetic `chunks` uuid — finished ids compress to
-    * intervals, resume is interval arithmetic, no per-chunk rows.
+    * on a crash. The gate runs a crash schedule: snapshot the
+    * `customer` table in 8 PK-range chunks with an injected crash after
+    * chunks 0-2 commit, before chunk 3's write — then resumes (which
+    * must run exactly chunks 3-7), then runs a third time (which must
+    * be a covered no-op). The materialized state must equal a direct
+    * read of the table: any chunk lost, skipped, or double-counted by
+    * the resume logic breaks the hash. Chunk progress rides the state
+    * table's manifest: each chunk's files and its id commit in one
+    * rename, so no crash point can leave a chunk half-recorded.
     */
   private def cdcSnapshotResume(s: SparkSession, d: String): DataFrame = {
     val base = GateTmp.once("snap-resume", d) { base =>
@@ -235,7 +232,7 @@ object CdcQueries {
             failAfterChunks = failAfter)
           ()
         } catch { case _: IllegalStateException => () }
-      run(failAfter = 3) // crash: chunk 3 written, not recorded
+      run(failAfter = 3) // crash: chunks 0-2 committed, chunk 3 not begun
       run(failAfter = Int.MaxValue) // resume to completion
       val third = CdcPipeline.resumableSnapshot(s, store, dir, "harness-src",
         snap, chunkBy = "pk", numChunks = 8, pos = "harness-src:1-1")

@@ -25,7 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (untouched directories are never opened) and the state write commits
   * new files for ONLY the touched cohorts through the table's manifest
   * ([[MetaTables.write]]; a cohort the merge empties keeps no file).
-  * Per-batch cost is
+  * The view is partitioned and committed the same way, so untouched
+  * cohorts' view files are never rewritten. Per-batch cost is
   * O(batch + touched-cohorts' state), never O(state), and the merged
   * touched-cohort frame is materialized ONCE (localCheckpoint) and
   * reused by the state write AND the rank refresh — the refresh never
@@ -46,14 +47,15 @@ object TopkMaintenance {
     * latest-wins, merge into the touched cohorts' state partitions,
     * then re-rank ONLY those cohorts of the top-k view.
     *
-    * Crash contract: the state and view writes are two files, not one
-    * transaction — a crash between them leaves the view stale for the
-    * batch's cohorts. Recovery is the pipeline's standard at-least-once
-    * rule: RE-APPLY the batch. Both halves are idempotent under
-    * re-delivery (the state merge replaces the same cohorts' files;
-    * the re-rank recomputes from post-merge state), so the pair
-    * converges — same posture as the [[AggMaintenance]] rollups and
-    * the gated state sink.
+    * Crash contract: the state and the view each commit by one
+    * manifest rename, but the two renames are not one transaction — a
+    * crash between them leaves the view stale for the batch's cohorts.
+    * Recovery is the pipeline's standard at-least-once rule: RE-APPLY
+    * the batch. Both halves are idempotent under re-delivery (the state
+    * merge replaces the same cohorts' files; the re-rank recomputes
+    * from post-merge state), so the pair converges — the posture of the
+    * gated state sink. (The [[AggMaintenance]] rollups are NOT
+    * idempotent under re-delivery; see their crash contract.)
     */
   def applyBatch(spark: SparkSession, baseDir: String, batch: DataFrame): Unit = {
     val stateDir = s"$baseDir/state"
@@ -97,24 +99,22 @@ object TopkMaintenance {
       .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= K)
       .select(col("cohort").cast("long").as("cohort"),
         col("rnk"), col("pk"), col("value"))
-    val merged = MetaTables.readIfExists(spark, topkDir) match {
-      case None => fresh
-      case Some(old) =>
-        old.select("cohort", "rnk", "pk", "value")
-          .filter(!col("cohort").isin(touched.map(Integer.valueOf): _*))
-          .unionByName(fresh)
-    }
-    val out = merged.localCheckpoint(true)
-    // the view itself is K×cohorts — bounded, one file is the right shape
-    out.coalesce(1).write.mode("overwrite").parquet(topkDir)
+    // the view commits like its state: per-cohort files, replacing
+    // exactly the touched cohorts' (a cohort the merge emptied keeps
+    // none); the view is K×cohorts, so one task writes it
+    val view = MetaTables.readLog(topkDir)
+    MetaTables.write(topkDir, view, fresh.coalesce(1),
+      view.getOrElse(StateLog.empty(fresh.schema, "cohort", 10)), hit)
   }
 
   /** The maintained view, typed for output. */
-  def read(spark: SparkSession, baseDir: String): DataFrame =
-    MetaTables.readIfExists(spark, s"$baseDir/topk") match {
+  def read(spark: SparkSession, baseDir: String): DataFrame = {
+    val dir = s"$baseDir/topk"
+    MetaTables.readLog(dir) match {
       case None => spark.emptyDataFrame
-      case Some(df) => df
+      case Some(log) => MetaTables.read(spark, dir, log, log.files)
         .select(col("cohort"), col("rnk"), col("pk").as("user_id"), col("value"))
         .orderBy("cohort", "rnk")
     }
+  }
 }

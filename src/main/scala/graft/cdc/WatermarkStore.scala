@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
 import graft.model.GtidSet
 
@@ -24,25 +24,6 @@ private[cdc] object MetaTables {
     * spec throws from it to stop a commit at that step.
     */
   @volatile private[cdc] var onStep: (String, String) => Unit = (_, _) => ()
-
-  /** Read-a-table-that-may-not-exist-yet, shared by the incremental
-    * rollup and top-k state tables ([[AggMaintenance]],
-    * [[TopkMaintenance]]). `None` covers exactly the two recoverable
-    * "no data yet" shapes: the path is absent (first ever run; tested
-    * on the driver, so Spark never probes a missing path) or present
-    * but file-less (UNABLE_TO_INFER_SCHEMA — an overwrite was torn
-    * mid-write, leaving only temporaries; both consumers are
-    * idempotent-replay safe, so treating a torn table as empty
-    * self-heals on the next write instead of crash-looping). Every
-    * other failure propagates.
-    */
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (!Files.exists(Paths.get(path))) None
-    else
-      try Some(spark.read.parquet(path))
-      catch {
-        case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-      }
 
   /** Name of the temp file [[replaceAtomically]] stages `name` in. */
   def tmpName(name: String): String = s".$name.tmp"
@@ -166,15 +147,19 @@ private[cdc] object MetaTables {
   */
 private[cdc] final case class StateFile(bucket: Int, path: String, bytes: Long)
 
-/** A resumable snapshot's pinned chunk geometry for one table. */
-private[cdc] final case class ChunkBounds(table: String, lo: Long, hi: Long, numChunks: Int)
+/** A resumable snapshot's pinned chunk geometry for one table, and the
+  * ids of the chunks whose files the manifest already names.
+  */
+private[cdc] final case class ChunkBounds(
+    table: String, lo: Long, hi: Long, numChunks: Int, done: Seq[Int])
 
 /** The manifest of a state table, `<dir>/_graft_log.json`: its schema
   * (JSON), its partition column and count, its live data files and the
-  * resumable snapshot's pinned chunk bounds. The data files on disk are only
-  * candidates; a table is exactly what its manifest names, so replacing
-  * the manifest ([[MetaTables.replaceAtomically]]) is the one commit
-  * point of every state write.
+  * resumable snapshot's pinned chunk bounds and progress. The data
+  * files on disk are only candidates; a table is exactly what its
+  * manifest names, so replacing the manifest
+  * ([[MetaTables.replaceAtomically]]) is the one commit point of every
+  * state write.
   *
   *   - The schema is the single-table analog of Delta's transaction-log
   *     schema: parquet footers can't speak for a table whose buckets
@@ -188,6 +173,8 @@ private[cdc] final case class ChunkBounds(table: String, lo: Long, hi: Long, num
   *     snapshot that re-derived lo/hi from a feed that was not actually
   *     pinned would compute DIFFERENT chunk ranges while chunk ids are
   *     already marked covered — rows silently missed or duplicated.
+  *   - A chunk's id joins `done` in the manifest that names its files,
+  *     so a chunk is committed whole or not at all.
   */
 private[cdc] final case class StateLog(
     schema: String, partitionBy: String, buckets: Int,

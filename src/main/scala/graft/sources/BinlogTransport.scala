@@ -33,10 +33,11 @@ final class CorruptStreamException(msg: String, cause: Throwable = null)
 trait BinlogTransport {
   def fetch(): Vector[FeedRow]
 
-  /** Release hook, driven by the stream's `commit(end)`: every
-    * `(uuid, pos)` in `committed` is durably admitted into a finished
-    * micro-batch, so a transport that holds a dump open may release
-    * what it keeps for those transactions. Default no-op.
+  /** Release hook, driven by the stream's `commit(end)` and, once per
+    * stream, by the offset it starts from (a restart's checkpoint):
+    * every `(uuid, pos)` in `committed` is durably admitted into a
+    * finished micro-batch, so a transport need never serve those
+    * transactions again. Default no-op.
     */
   def commit(uuid: String, committed: GtidSet): Unit = ()
 }
@@ -91,4 +92,6 @@ final class ReconnectingTransport(
     }
     throw new IllegalStateException("unreachable")
   }
+
+  override def commit(uuid: String, committed: GtidSet): Unit = inner.commit(uuid, committed)
 }

@@ -184,14 +184,23 @@ final class GtidReplayStream(
   private[sources] var window: Map[String, Vector[FeedRow]] =
     sources.map { case (uuid, _) => uuid -> Vector.empty[FeedRow] }.toMap
 
+  /** Whether the transports have heard the offset this stream started from. */
+  private var resumed = false
+
   /** One `fetch()` per source. Rows of an already-seen GTID are
     * dropped, so a transport that serves its whole buffer again adds
-    * nothing twice.
+    * nothing twice. Before the first fetch, the stream's first `start`
+    * offset — a restart's checkpoint, which a finished batch already
+    * holds — is committed, so a fresh transport asks the wire only for
+    * what lies above it.
     */
-  private def pull(): Unit = transports.foreach { case (uuid, transport) =>
-    val fresh = transport.fetch().filter(r => !seen.contains(uuid, r.pos))
-    window = window.updated(uuid, window(uuid) ++ fresh)
-    seen = fresh.foldLeft(seen)((s, r) => s.add(uuid, r.pos))
+  private def pull(start: GtidSet): Unit = {
+    if (!resumed) { resumed = true; commit(GtidOffset(start)) }
+    transports.foreach { case (uuid, transport) =>
+      val fresh = transport.fetch().filter(r => !seen.contains(uuid, r.pos))
+      window = window.updated(uuid, window(uuid) ++ fresh)
+      seen = fresh.foldLeft(seen)((s, r) => s.add(uuid, r.pos))
+    }
   }
 
   override def initialOffset(): Offset = GtidOffset(GtidSet.empty)
@@ -208,8 +217,8 @@ final class GtidReplayStream(
     maxRowsPerBatch.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    pull()
     val from = start.asInstanceOf[GtidOffset].set
+    pull(from)
     val pending = window.toSeq
       .flatMap { case (uuid, rows) =>
         rows.filter(r => !from.contains(uuid, r.pos)).map(r => (uuid, r.pos))
@@ -264,7 +273,7 @@ final class GtidReplayStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GtidOffset].set
     val to = end.asInstanceOf[GtidOffset].set
-    if (!to.subsetOf(seen)) pull()
+    if (!to.subsetOf(seen)) pull(from)
     transports.flatMap { case (uuid, _) =>
       val rows = window(uuid)
         .filter(r => to.contains(uuid, r.pos) && !from.contains(uuid, r.pos))
@@ -282,9 +291,9 @@ final class GtidReplayStream(
     * checkpoint, no later `planInputPartitions(start ⊇ end, _)` asks
     * for those rows again within this stream instance, so they leave
     * the window. (A query RESTART builds a fresh stream that replays
-    * from the wire, so trimming here never loses recovery rows.) Each
-    * transport then hears of the commit through its release hook
-    * ([[BinlogTransport.commit]]).
+    * from the wire above its checkpoint, so trimming here never loses
+    * recovery rows.) Each transport then hears of the commit through
+    * its release hook ([[BinlogTransport.commit]]).
     */
   override def commit(end: Offset): Unit = {
     val set = end match {

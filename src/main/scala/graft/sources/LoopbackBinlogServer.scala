@@ -39,6 +39,8 @@ final class LoopbackBinlogServer(
   private val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
   def port: Int = server.getLocalPort
   private val conns = new AtomicInteger(0)
+  /** Connections accepted so far, one FDE packet each. */
+  def connections: Int = conns.get()
   /** Event packets (FDE included) that actually crossed the wire —
     * what resume-protocol assertions count.
     */

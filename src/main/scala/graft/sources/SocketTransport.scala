@@ -51,6 +51,18 @@ final class SocketTransport(
     */
   @volatile private[sources] var watermark: GtidSet = GtidSet.empty
 
+  /** Committed transactions of `uuid` join the resume position, so a
+    * fresh transport seeded with a restart's checkpoint dumps only what
+    * lies above it. Only a source labelled with its server's uuid (the
+    * `sources = <uuid>=<id>` or `uuid` option) names wire positions; a
+    * plain label such as the default `harness-src` does not, and its
+    * commits leave the resume position as it is.
+    */
+  override def commit(uuid: String, committed: GtidSet): Unit = synchronized {
+    if (scala.util.Try(java.util.UUID.fromString(uuid)).isSuccess)
+      watermark = watermark.merge(GtidSet(committed.intervals.filter(_._1 == uuid)))
+  }
+
   override def fetch(): Vector[FeedRow] = synchronized {
     val socket = new Socket()
     try {

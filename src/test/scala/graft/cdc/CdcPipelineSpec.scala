@@ -530,23 +530,27 @@ class CdcPipelineSpec extends AnyFunSuite {
       CdcPipeline.resumableSnapshot(spark, store, dir, "src", snap,
         chunkBy = "pk", numChunks = n, pos = "src:1-1", failAfterChunks = failAfter)
 
-    // crash after chunk 2's data lands, before its completion record
+    // chunk progress as the state manifest commits it
+    def done(): Seq[Int] =
+      MetaTables.readLog(dir).toSeq.flatMap(_.chunks).filter(_.table == "events").flatMap(_.done)
+
+    // crash after two chunks commit, before the third chunk's write
     intercept[IllegalStateException](run(failAfter = 2))
-    val partial = store.watermark(spark, "src", SnapshotJob.schemaName, "events#chunks")
-    assert((0 until n).count(k => partial.contains("chunks", k.toLong)) == 2,
-      "exactly the two recorded chunks are covered")
+    val partial = done()
+    assert(partial.sorted == partial.distinct.sorted && (0 until n).count(partial.contains) == 2,
+      "exactly the two committed chunks are done")
     assert(store.watermark(spark, "src", SnapshotJob.schemaName, "events").isEmpty,
       "a half-done snapshot must NOT pin the table watermark")
 
-    // resume: completes the unrecorded chunk (re-append) + the rest
+    // resume: runs exactly the chunks the manifest does not name as done
     val resumed = run(failAfter = Int.MaxValue)
-    assert(resumed.length == n - 2, "resume runs only unrecorded chunks")
-    val full = store.watermark(spark, "src", SnapshotJob.schemaName, "events#chunks")
-    assert((0 until n).forall(k => full.contains("chunks", k.toLong)))
+    assert(resumed.length == n - 2, "resume runs only uncommitted chunks")
+    val full = done()
+    assert((0 until n).forall(full.contains))
     assert(!store.watermark(spark, "src", SnapshotJob.schemaName, "events").isEmpty,
       "a finished snapshot pins the table watermark")
 
-    // the re-appended chunk's duplicates collapse; state == the table
+    // state == the table
     val got = CdcPipeline.readState(spark, dir).select("pk", "value").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
     val want = snap.select("pk", "value").collect()
@@ -978,8 +982,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(writes.forall(_.contains(new File(dir).getAbsolutePath)))
     val reopened = new WatermarkStore(s"$base/wm")
     assert(reopened.watermark(spark, "src", SnapshotJob.schemaName, "events").serialize == "src:1-7")
-    assert(reopened.watermark(spark, "src", SnapshotJob.schemaName, "events#chunks")
-      .serialize == "chunks:0-1")
+    assert(MetaTables.readLog(dir).toSeq.flatMap(_.chunks).filter(_.table == "events")
+      .flatMap(_.done).sorted == Seq(0, 1))
     assert(CdcPipeline.readState(spark, dir).count() == snap.count())
   }
 

@@ -16,7 +16,7 @@ object WatermarkStorePropSpec extends Properties("WatermarkStore") {
 
   private val keys = Seq(
     ("src-a", SnapshotJob.schemaName, "events"),
-    ("src-a", SnapshotJob.schemaName, "events#chunks"),
+    ("src-a", SnapshotJob.schemaName, "orders"),
     ("src-b", SnapshotJob.schemaName, "events"))
 
   private val genPos: Gen[GtidSet] = for {

@@ -634,27 +634,31 @@ class PlanAuditSpec extends AnyFunSuite {
       col("c_acctbal").cast("double").as("value"))
       .write.parquet(s"$base/snap")
     val feed = spark.read.parquet(s"$base/snap") // a REAL scan, so pushdown is visible
-    // first run: chunk 0 completes, chunk 1 is written-but-unrecorded
+    // first run: chunk 0 commits, then the run stops before chunk 1's write
     intercept[IllegalStateException](graft.cdc.CdcPipeline.resumableSnapshot(
       spark, store, s"$base/state", "src", feed, "pk", 5, "src:1-1", failAfterChunks = 1))
-    // capture every plan the RESUME executes
+    // capture every plan the RESUME executes. The listener bus is async
+    // and FIFO: the crashed first run's chunk-0 write event can be
+    // delivered after this listener registers, so plans count only
+    // after a marker query that runs once the listener is in place.
     val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    @volatile var armed = false
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (armed) plans.add(plan) else if (plan.contains("resume_marker")) armed = true
+      }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).selectExpr("id AS resume_marker").collect()
       graft.cdc.CdcPipeline.resumableSnapshot(
         spark, store, s"$base/state", "src", feed, "pk", 5, "src:1-1")
-      // the listener bus is async: poll until the chunk-write plans land.
-      // Compare DISTINCT chunk lower bounds, not raw plan counts — the
-      // crashed first run's chunk-1 write event can be delivered late
-      // (after this listener registers), so a stray duplicate plan for a
-      // legitimately-written chunk is bus timing, not a contract breach.
+      // poll until the chunk-write plans land, and compare DISTINCT
+      // chunk lower bounds, not raw plan counts
       import scala.jdk.CollectionConverters._
       def chunkLos() = plans.asScala.toSeq
         .flatMap("GreaterThanOrEqual\\(pk,(\\d+)\\)".r
@@ -664,7 +668,7 @@ class PlanAuditSpec extends AnyFunSuite {
       while (chunkLos().size < 4 && System.nanoTime() < deadline) Thread.sleep(50)
       val los = chunkLos()
       // customer pks are 0..149 → 5 chunks of width 30; chunk 0 = [0,29]
-      // was recorded before the crash, so resume must scan ONLY chunks
+      // was committed before the crash, so resume must scan ONLY chunks
       // 1-4 — each as a pushed range — and never re-read chunk 0
       assert(los == Seq(30L, 60L, 90L, 120L),
         s"resume must scan exactly the 4 missing chunk ranges, saw bounds $los")

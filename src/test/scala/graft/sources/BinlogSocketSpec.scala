@@ -166,6 +166,7 @@ class BinlogSocketSpec extends AnyFunSuite {
     def start() = spark.readStream
       .format(classOf[GtidReplayProvider].getName)
       .option("bufferId", s"socket:127.0.0.1:${server.port}:repl:s3cret")
+      .option("uuid", U) // the server's uuid: offsets then name wire positions
       .load()
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -183,17 +184,24 @@ class BinlogSocketSpec extends AnyFunSuite {
           "the first archive streams through the socket into micro-batches")
       } finally q.stop()
       // the binlog grows WHILE THE QUERY IS DOWN; the restart builds a
-      // FRESH transport (empty wire watermark — the server re-serves
-      // everything), and the checkpointed GTID-set offset must filter
-      // redelivery down to exactly the new transactions
+      // FRESH transport, which the stream seeds with the checkpointed
+      // GTID-set offset, so its dump asks only for the new transactions
       server.archive = encodeArchive(feed)
       delivered.synchronized(delivered.clear())
+      val (packets, conns) = (server.eventPacketsServed.get(), server.connections)
       val q2 = start()
       try {
         q2.processAllAvailable()
         assert(delivered.synchronized(delivered.toSet) == rest.map(_.pos).toSet,
           "resume must deliver exactly the transactions above the checkpoint")
       } finally q2.stop()
+      // read once the query has stopped: a fetch runs to its EOF, so
+      // every connect it made has served its packets
+      val served = server.eventPacketsServed.get() - packets
+      val connects = server.connections - conns
+      assert(served == connects + 4L * rest.length,
+        s"the restart's wire carries one FDE per connect and only the ${rest.length} new " +
+          s"transactions: $served packets over $connects connects")
     } finally server.stop()
   }
 
